@@ -34,12 +34,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .table import (
-    COMMIT_TS,
-    _MANIFEST_BACKENDS,
-    MvccTable,
-    footer_range_entries,
-)
+from .table import COMMIT_TS, MvccTable, _JsonManifest, footer_range_entries
 
 
 class SecondaryIndex:
@@ -47,7 +42,6 @@ class SecondaryIndex:
         self,
         table: MvccTable,
         col: str,
-        backend: str = "json",
         max_candidates: int = 10_000,
     ):
         if col == table.key_col:
@@ -57,7 +51,7 @@ class SecondaryIndex:
         self.max_candidates = max_candidates
         root = os.path.join(table.root, f"sidx_{col}")
         os.makedirs(root, exist_ok=True)
-        self.manifest = _MANIFEST_BACKENDS[backend](root)
+        self.manifest = _JsonManifest(root)
 
     # -- maintenance -------------------------------------------------------
     def index_commit(self, ts: int) -> None:

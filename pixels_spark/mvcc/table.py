@@ -25,7 +25,6 @@ broadcasts it when it fits.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
@@ -42,10 +41,9 @@ DELETED_TS = "_deleted_ts"
 
 class _JsonManifest:
     """Point-index manifest persisted as a JSON file with flock'd atomic
-    read-modify-write (the default; human-inspectable). One of the pluggable
-    persistence backends mirroring the reference's SinglePointIndex
-    implementations (rocksdb/sqlite/mapdb/memory,
-    ``pixels-index/``, ``SinglePointIndex.java:108-202``)."""
+    read-modify-write (human-inspectable) — the file-granular stand-in for
+    the reference's SinglePointIndex persistence
+    (``pixels-index/``, ``SinglePointIndex.java:108-202``)."""
 
     def __init__(self, root: str):
         self.path = os.path.join(root, "_point_index.json")
@@ -82,84 +80,6 @@ class _JsonManifest:
 
     def remove_commits(self, ts_set: set[int]) -> None:
         self._rmw(lambda idx: [e for e in idx if e["commit_ts"] not in ts_set])
-
-
-class _SqliteManifest:
-    """Point-index manifest in SQLite — transactional appends/removes
-    without an external lock file; the closest stdlib analog to the
-    reference's SqlitePointIndex. Key bounds are stored JSON-encoded so
-    int/float/string keys round-trip with their comparison semantics."""
-
-    def __init__(self, root: str):
-        self.path = os.path.join(root, "_point_index.db")
-        self._ddl_done = False
-
-    @contextlib.contextmanager
-    def _con(self, write: bool = False):
-        """One short-lived connection per operation, always closed (a
-        bare ``with sqlite3.connect(...)`` commits but never closes —
-        sustained ingest would leak file descriptors). DDL runs once per
-        manifest instance, and only when writing or the db already
-        exists, so pure reads on a missing index stay read-only."""
-        import sqlite3
-
-        con = sqlite3.connect(self.path, timeout=30.0)
-        try:
-            if not self._ddl_done and (write or os.path.exists(self.path)):
-                con.execute(
-                    "CREATE TABLE IF NOT EXISTS entries ("
-                    "path TEXT NOT NULL, commit_ts INTEGER NOT NULL, "
-                    "min_key TEXT NOT NULL, max_key TEXT NOT NULL)"
-                )
-                con.execute(
-                    "CREATE INDEX IF NOT EXISTS idx_commit ON entries(commit_ts)"
-                )
-                self._ddl_done = True
-            with con:  # transaction scope: commit on success, rollback on error
-                yield con
-        finally:
-            con.close()
-
-    def exists(self) -> bool:
-        return os.path.exists(self.path)
-
-    def load(self) -> list[dict]:
-        import json
-
-        if not self.exists():
-            return []
-        with self._con() as con:
-            rows = con.execute(
-                "SELECT path, commit_ts, min_key, max_key FROM entries"
-            ).fetchall()
-        return [
-            {"path": p, "commit_ts": ts, "min": json.loads(mn), "max": json.loads(mx)}
-            for p, ts, mn, mx in rows
-        ]
-
-    def append(self, entries: list[dict]) -> None:
-        import json
-
-        with self._con(write=True) as con:
-            con.execute("BEGIN IMMEDIATE")
-            con.executemany(
-                "INSERT INTO entries (path, commit_ts, min_key, max_key) "
-                "VALUES (?, ?, ?, ?)",
-                [
-                    (e["path"], e["commit_ts"], json.dumps(e["min"]), json.dumps(e["max"]))
-                    for e in entries
-                ],
-            )
-
-    def remove_commits(self, ts_set: set[int]) -> None:
-        with self._con(write=True) as con:
-            con.execute("BEGIN IMMEDIATE")
-            con.executemany(
-                "DELETE FROM entries WHERE commit_ts = ?", [(t,) for t in ts_set]
-            )
-
-
-_MANIFEST_BACKENDS = {"json": _JsonManifest, "sqlite": _SqliteManifest}
 
 
 def _remove_commit_dir(path: str, ignore_errors: bool = False) -> None:
@@ -217,7 +137,6 @@ class MvccTable:
         trans: TransService | None = None,
         indexed: bool = False,
         index_files: int | None = None,
-        index_backend: str = "json",
     ):
         """``indexed=True`` maintains a point-lookup index on ingest
         (≈ SinglePointIndex key→RowLocation,
@@ -227,13 +146,7 @@ class MvccTable:
         ``point_lookup`` opens only the files whose key range covers the
         probe — O(matching files), not O(table), on a multi-file table.
         ``index_files`` bounds files per commit (defaults to the session's
-        shuffle parallelism). ``index_backend`` picks the manifest
-        persistence ('json' flock'd file | 'sqlite' transactional DB),
-        mirroring the reference's pluggable SinglePointIndex impls."""
-        if index_backend not in _MANIFEST_BACKENDS:
-            raise ValueError(
-                f"index_backend must be one of {sorted(_MANIFEST_BACKENDS)}"
-            )
+        shuffle parallelism)."""
         self.spark = spark
         self.root = root
         self.key_col = key_col
@@ -242,7 +155,7 @@ class MvccTable:
         self.trans = trans or TransService(root)
         self.indexed = indexed
         self.index_files = index_files
-        self.manifest = _MANIFEST_BACKENDS[index_backend](root)
+        self.manifest = _JsonManifest(root)
         self.index_path = self.manifest.path
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -310,9 +223,9 @@ class MvccTable:
         manifest (the putPrimaryEntries analog — file-granular instead of
         row-granular because parquet min/max + in-file sort already resolve
         the row)."""
-        # manifest mutations are atomic in the backend (flock'd RMW for
-        # json, a transaction for sqlite), so an insert landing mid-vacuum
-        # can't have its entries dropped by the vacuum's rewrite
+        # manifest mutations are atomic (flock'd read-modify-write), so an
+        # insert landing mid-vacuum can't have its entries dropped by the
+        # vacuum's rewrite
         self.manifest.append(footer_range_entries(commit_dir, self.key_col, ts))
 
     def delete(self, keys: Sequence | DataFrame, ts: int | None = None) -> int:

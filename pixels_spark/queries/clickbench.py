@@ -14,19 +14,12 @@ is declared here because the oracle demands exactness.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dsum, _sql_dsum
 from .registry import declare
-
-
-def _dsum(c: Column) -> Column:
-    return F.sum(c.cast("decimal(18,6)")).cast("double")
-
-
-def _sql_dsum(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @declare(

@@ -13,6 +13,23 @@ text runs verbatim on BOTH DuckDB and ``spark.sql`` — iteration count is
 fixed, not convergence-tested, precisely so both engines compute the same
 deterministic value (compared at the driver's 9-significant-digit float
 canonicalization; see FIXTURES.md §Oracle-comparison).
+
+Every graph and recommender query here runs on one of two relations of
+orders ⋈ lineitem, each built in exactly one place:
+
+- the customer–supplier edge set, ``cs_edges`` — the customer graph
+  family (pagerank, ppr, bfs_hops, label_prop, modularity, assortativity,
+  hits); the two weighted builds keep their own per-edge aggregates;
+- the per-order part baskets, ``order_baskets`` — the part co-purchase
+  family (triangles, transitivity, kcore, link_predict) and the item-item
+  recommenders, with ``item_supports`` (per-part basket counts),
+  ``basket_pairs`` (one row per within-basket pair) and
+  ``copurchase_pairs`` (support-thresholded pair counts) over it.
+
+Each caller keeps its own persist / ``cut_lineage`` choice, and every
+oracle keeps its inline CTEs, so correctness is still checked against the
+raw tables. The helpers stay in this module: ``rec_model_path``'s build
+fingerprint hashes only the defining module.
 """
 
 from __future__ import annotations
@@ -25,6 +42,74 @@ from ..functions import graph as G
 from .registry import declare
 
 _ITERS = 6
+
+
+def cs_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct customer→supplier edges ``(src 'c<custkey>', dst
+    's<suppkey>')``: customer X ordered a line supplied by Y."""
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
+    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
+    # guide §2.3 narrower types): the pair distinct is bijective with the
+    # tagged-string distinct, so values are identical, but the distinct
+    # exchange now carries two longs instead of two strings and the
+    # string build runs once per DISTINCT edge, not once per joined row.
+    return (
+        o.join(l, o["o_orderkey"] == l["l_orderkey"])
+        .select("o_custkey", "l_suppkey")
+        .distinct()
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+    )
+
+
+def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_orderkey, ps)``: each order's sorted distinct parts — ONE
+    lineitem shuffle (collect_set dedups, so no separate distinct)."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    )
+
+
+def item_supports(per_order: DataFrame) -> DataFrame:
+    """``(item, n_orders)``: the number of baskets holding each item."""
+    return (
+        per_order.select(F.explode("ps").alias("item"))
+        .groupBy("item")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
+    )
+
+
+def basket_pairs(per_order: DataFrame, a: str, b: str) -> DataFrame:
+    """One ``(a, b)`` row per pair of a sorted array column ``ps``, a < b.
+
+    Ordered-pair expansion via array HOFs: pairs are distinct within a
+    sorted set by construction, so a support count over them is a plain
+    COUNT; fanout is C(size(ps), 2) per row, bounded by basket size, vs
+    the equivalent self-join's two lineitem-wide exchanges (measured 27%
+    faster at sf0.1)."""
+    pair_expr = (
+        "transform(ps, (x, i) -> "
+        f"transform(slice(ps, i + 2, size(ps)), y -> struct(x AS {a}, y AS {b})))"
+    )
+    return per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p")).select(
+        f"p.{a}", f"p.{b}"
+    )
+
+
+def copurchase_pairs(
+    per_order: DataFrame, a: str, b: str, min_support: int
+) -> DataFrame:
+    """``(a, b, cooccur)``: item pairs sharing >= ``min_support`` baskets."""
+    return (
+        basket_pairs(per_order, a, b)
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cooccur"))
+        .filter(F.col("cooccur") >= min_support)
+    )
 
 
 def _pagerank_oracle() -> str:
@@ -74,22 +159,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Y. Each round is one shuffle (edge ⋈ rank on src, groupBy dst with
     map-side partials); edges/degrees persist once; lineage truncated
     every 3 rounds. Mass conservation (Σpr = 1) is property-tested."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
+    eb = cs_edges(spark, sf_dir)
     edges = eb.union(eb.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return G.pagerank(edges, iterations=_ITERS, damping=0.85).orderBy("node")
 
@@ -149,23 +219,8 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset along the purchase graph' primitive. Zero-rank nodes (not yet
     reached) are filtered on both engines; otherwise the same
     single-shuffle round structure as graph_pagerank."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
+    eb = cs_edges(spark, sf_dir)
     edges = eb.union(eb.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     seeds = c.filter(F.col("c_nationkey") == 0).select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node")
@@ -309,12 +364,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering = 2*tri / (deg*(deg-1)) on integer-derived doubles, exact
     on both engines.
 
-    100 TB: pair generation shuffles lineitem ONCE (groupBy orderkey →
-    per-order sorted part set → ordered-pair expansion via array HOFs —
-    pairs are distinct within an order by construction, so the support
-    count is a plain COUNT; fanout bounded by order size, vs the
-    equivalent self-join's two lineitem-wide exchanges — measured 27%
-    faster at sf0.1). Wedge fanout is bounded by per-vertex out-degree,
+    100 TB: pair generation shuffles lineitem ONCE (``order_baskets`` →
+    ``basket_pairs``). Wedge fanout is bounded by per-vertex out-degree,
     controlled by the support threshold (raise it as density grows).
     Both triangle joins are plain equi-joins AQE can re-plan on skew.
 
@@ -330,14 +381,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap aggregate) exceeds the m^1.5 bound — i.e. real hub-skewed
     link graphs.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS s1, y AS s2)))"
-    )
     from ..functions.dedup import cut_lineage
 
     # cut_lineage on the edge relation (r12 optimization): FOUR plan
@@ -348,12 +391,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup these canonically-distinct subtrees). The checkpoint computes
     # the pair expansion ONCE; consumers re-read its compact blocks.
     edges = cut_lineage(
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.s1", "p.s2")
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .select("s1", "s2")
+        copurchase_pairs(order_baskets(spark, sf_dir), "s1", "s2", 2).select(
+            "s1", "s2"
+        )
     )
     tri = G.triangles(edges)
     # explode(array(a,b,c)) emits the same node multiset as the previous
@@ -440,23 +480,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, so total join work is O(edges touched) — while the oracle
     states the same fixpoint as 3 unrolled min-merge CTEs (exact
     integers; dialect-shared strict)."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
+    eb = cs_edges(spark, sf_dir)
     edges = eb.union(eb.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     seeds = c.filter(F.col("c_nationkey") == 0).select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node")
@@ -522,22 +547,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     work tracks churn; the dialect-shared oracle states the identical
     fixpoint prefix as 3 unrolled min-merge CTEs (min over strings —
     total order, no floats anywhere)."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
+    eb = cs_edges(spark, sf_dir)
     edges = eb.union(
         eb.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -653,37 +663,16 @@ def rec_item_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     double FROM exact integer counts — identical expression both
     engines, so the oracle is exact and the text dialect-shared.
 
-    100 TB: co-occurrence pairs are generated with ONE lineitem shuffle
-    (groupBy orderkey → sorted distinct item set → ordered-pair HOF
-    expansion, the graph_triangles pattern) instead of the oracle's
-    relational self-join (two basket-wide exchanges); fanout is bounded
-    by basket size, and the support HAVING prunes the pair table before
-    the two small n-joins. Top-20 is sort+limit (per-partition heaps).
-    Skew lever at scale: cap or sample mega-baskets (a basket of k items
-    emits C(k,2) pairs) before expansion. As in rec_assoc_rules (r11),
-    the item supports derive from the persisted per-order collect_set
-    frame — collect_set dedups, so the separate distinct() exchange the
-    first version paid is gone and lineitem is shuffled exactly once."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    ).persist()
-    n = (
-        per_order.select(F.explode("ps").alias("item"))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS item_a, y AS item_b)))"
-    )
-    c = (
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.item_a", "p.item_b")
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cooccur"))
-        .filter(F.col("cooccur") >= 3)
-    )
+    100 TB: pairs and item supports both derive from the persisted
+    ``order_baskets`` frame (ONE lineitem shuffle) instead of the
+    oracle's relational self-join; the support HAVING prunes the pair
+    table before the two small n-joins. Top-20 is sort+limit
+    (per-partition heaps). Skew lever at scale: cap or sample
+    mega-baskets (a basket of k items emits C(k,2) pairs) before
+    expansion."""
+    per_order = order_baskets(spark, sf_dir).persist()
+    n = item_supports(per_order)
+    c = copurchase_pairs(per_order, "item_a", "item_b", 3)
     na = n.select(F.col("item").alias("item_a"), F.col("n_orders").alias("n_a"))
     nb = n.select(F.col("item").alias("item_b"), F.col("n_orders").alias("n_b"))
     return (
@@ -710,24 +699,9 @@ def _basket_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     math, support ≥ 3, sim quantized DECIMAL(18,12) — exact on both
     engines): (item, cand, sim). Shared by the rec_model derived build
     and the model-refresh path."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.distinct()
-    n = baskets.groupBy(F.col("l_partkey").alias("item")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders")
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS item_a, y AS item_b)))"
-    )
-    c = (
-        baskets.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.item_a", "p.item_b")
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cooccur"))
-        .filter(F.col("cooccur") >= 3)
-    )
+    per_order = order_baskets(spark, sf_dir)
+    n = item_supports(per_order)
+    c = copurchase_pairs(per_order, "item_a", "item_b", 3)
     sims = (
         c.join(n.select(F.col("item").alias("item_a"), F.col("n_orders").alias("n_a")), "item_a")
         .join(n.select(F.col("item").alias("item_b"), F.col("n_orders").alias("n_b")), "item_b")
@@ -955,44 +929,20 @@ def rec_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     are single double expressions over exact integer counts — identical
     text both engines, so the oracle is exact AND dialect-shared.
 
-    Scale: directed pairs come from the SAME single-shuffle HOF
-    expansion as rec_item_sim (per-order sorted item set -> ordered
-    pairs, emitted once and mirrored), not the oracle's basket×basket
-    self-join; the support HAVING prunes before the two n-joins; the
-    basket total is a 1-row broadcast cross join (plan-lint-allowlisted
-    scalar). Mega-basket cap applies as in rec_item_sim.
-
-    ONE lineitem shuffle total (r11, after the 25× probe read 29.9×):
-    the basket frame previously materialized via a separate
-    ``distinct()`` exchange feeding the item supports and basket total;
-    both now derive from the persisted per-order ``collect_set`` frame
-    (collect_set already dedups), so lineitem is shuffled once and the
-    support/total aggregates reuse the order-grain result — re-probed
-    11.6× at 25× volume (sub-linear; the two-shuffle form measured
-    29.9×)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    ).persist()
+    Scale: directed pairs come from the SAME basket-pair expansion as
+    rec_item_sim (emitted once and mirrored), not the oracle's
+    basket×basket self-join; the support HAVING prunes before the two
+    n-joins; the basket total is a 1-row broadcast cross join
+    (plan-lint-allowlisted scalar). Mega-basket cap applies as in
+    rec_item_sim. Pairs, supports and the total all reuse the persisted
+    ``order_baskets`` frame, so lineitem is shuffled once (r11: re-probed
+    11.6× at 25× volume; the earlier two-shuffle form measured 29.9×)."""
+    per_order = order_baskets(spark, sf_dir).persist()
     total = per_order.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_baskets")
     )
-    n = (
-        per_order.select(F.explode("ps").alias("item"))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b)))"
-    )
-    und = (
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.a", "p.b")
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cooccur"))
-        .filter(F.col("cooccur") >= 3)
-    )
+    n = item_supports(per_order)
+    und = copurchase_pairs(per_order, "a", "b", 3)
     # r12 optimization: mirror via ONE explode(array(...)) traversal —
     # the unionByName-of-self form replayed the pair explode + (a,b)
     # aggregate once per branch (same multiset, single plan branch)
@@ -1085,27 +1035,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrollable; at the fixture the peel shrinks 1880 -> 860 -> 503 -> 243
     nodes, so every round does real work. Integer-exact; dialect-shared.
 
-    Scale: edge construction is the single-shuffle HOF pair expansion
-    (rec_item_sim pattern), NOT the oracle's basket self-join; each peel
-    round is one degree aggregate + two semi-joins on a monotonically
-    shrinking, src-repartitioned edge set (functions/graph.py::kcore)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.distinct()
-    per_order = baskets.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS ia, y AS ib)))"
-    )
-    base = (
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.ia", "p.ib")
-        .groupBy("ia", "ib")
-        .agg(F.count(F.lit(1)).alias("_co"))
-        .filter(F.col("_co") >= 2)
-        .select("ia", "ib")
-    )
+    Scale: edge construction is the single-shuffle basket-pair
+    expansion (``copurchase_pairs``), NOT the oracle's basket self-join;
+    each peel round is one degree aggregate + two semi-joins on a
+    monotonically shrinking, src-repartitioned edge set
+    (functions/graph.py::kcore)."""
+    base = copurchase_pairs(order_baskets(spark, sf_dir), "ia", "ib", 2)
     edges = base.select(
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionByName(base.select(F.col("ib").alias("src"), F.col("ia").alias("dst")))
@@ -1183,22 +1118,8 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency (measured STANDALONE 3.08 → 2.66 s at sf0.1 best-of-3;
     the full-bench in-run number sits ~0.3-0.5 s higher from cold-cache
     and scheduling overhead — see BENCHLOG)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS s1, y AS s2)))"
-    )
     edges = (
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.s1", "p.s2")
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
+        copurchase_pairs(order_baskets(spark, sf_dir), "s1", "s2", 2)
         .select("s1", "s2")
         .persist()
     )
@@ -1230,9 +1151,7 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regardless of skew. True degrees still feed the Jaccard
     # denominator. The cap is restated in the SQL oracle.
     cn = (
-        nbrs.filter(F.size("ps") <= 256)
-        .select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select(F.col("p.s1").alias("a"), F.col("p.s2").alias("c"))
+        basket_pairs(nbrs.filter(F.size("ps") <= 256), "a", "c")
         .groupBy("a", "c")
         .agg(F.count(F.lit(1)).cast("bigint").alias("common_nbrs"))
     )
@@ -1322,23 +1241,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts... the LABEL FRAME is node-grain, so these are ordinary
     node-key hash joins, one shuffle each); the per-community frame is
     tiny and the global Q attaches from its persisted aggregate."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
+    eb = cs_edges(spark, sf_dir)
     # 1-round min labels have a CLOSED FORM — min over {v} ∪ neighbors —
     # so one groupBy-MIN replaces the delta-propagation machinery (whose
     # per-round persist/isEmpty scheduling is why label_prop itself is
@@ -1481,23 +1384,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one closing aggregate. Nothing quadratic anywhere."""
     from ..functions.dedup import cut_lineage
 
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    # distinct on the raw INT keys, tag-concat AFTER (r12 optimization,
-    # guide §2.3 narrower types): the pair distinct is bijective with the
-    # tagged-string distinct, so values are identical, but the distinct
-    # exchange now carries two longs instead of two strings and the
-    # string build runs once per DISTINCT edge, not once per joined row.
-    eb = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(F.col("o_custkey").alias("_ck"), F.col("l_suppkey").alias("_sk"))
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("_ck").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("_sk").cast("string")).alias("dst"),
-        )
-    )
-    und = cut_lineage(eb)
+    und = cut_lineage(cs_edges(spark, sf_dir))
     # SYMMETRY SHORTCUT (r12 optimization): the directed list is the
     # symmetrization of und, so every co-moment over it folds to an
     # exact-integer combination of per-undirected-edge terms —
@@ -1582,20 +1469,12 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent decimal mean; counts are exact BIGINTs (3·tri = Σ n_tri
     restated as sum/3 so both engines compute one integer division).
 
-    Scale: same bounds as graph_triangles — single-shuffle per-order
-    pair expansion (fanout capped by order size), two equi-join wedge
+    Scale: same bounds as graph_triangles — single-shuffle basket-pair
+    expansion (fanout capped by order size), two equi-join wedge
     closes (AQE-replannable), then node-grain aggregates; nothing here
     exceeds the triangle enumeration it reuses. On hub-skewed graphs
     switch the enumeration to degree-ordering per graph_triangles'
     documented threshold."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_expr = (
-        "transform(ps, (x, i) -> "
-        "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS s1, y AS s2)))"
-    )
     from ..functions.dedup import cut_lineage
 
     # same r12 optimization as graph_triangles: checkpoint the shared
@@ -1603,12 +1482,9 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and fold the unionAll-of-self node expansions into single-traversal
     # explode(array(...)) forms — identical multisets, one plan branch
     edges = cut_lineage(
-        per_order.select(F.explode(F.flatten(F.expr(pair_expr))).alias("p"))
-        .select("p.s1", "p.s2")
-        .groupBy("s1", "s2")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .select("s1", "s2")
+        copurchase_pairs(order_baskets(spark, sf_dir), "s1", "s2", 2).select(
+            "s1", "s2"
+        )
     )
     tri = G.triangles(edges)
     tcnt = (
@@ -1784,21 +1660,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     live on the node frames (tiny). DECIMAL(38,0) headroom: iterate
     magnitude ~ (mean degree)^rounds x n_nodes ~ 1e22 at sf100 — 16
     orders below the 1e38 ceiling."""
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    e = (
-        o.join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-        .persist()
-    )
+    e = cs_edges(spark, sf_dir).persist()
     auth = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("s")
     )

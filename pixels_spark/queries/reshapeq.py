@@ -23,21 +23,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dsum, _sql_dsum
 from .registry import declare
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _dsum(c: Column) -> Column:
-    return F.sum(c.cast("decimal(18,6)")).cast("double")
-
-
-def _sql_dsum(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 def _pivot_sql() -> str:

@@ -18,11 +18,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dec
 from .registry import declare
-
-
-def _dec(c: Column) -> Column:
-    return c.cast("decimal(18,6)")
 
 
 @declare(

@@ -15,11 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _sql_dsum
 from .registry import declare
-
-
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @declare(
@@ -29,7 +26,7 @@ def _dsum_sql(expr: str) -> str:
                AS window_start,
            event_type,
            CAST(count(*) AS BIGINT) AS n_events,
-           {_dsum_sql("value")} AS total_value
+           {_sql_dsum("value")} AS total_value
     FROM events
     GROUP BY 1, 2
     ORDER BY window_start, event_type
@@ -63,7 +60,7 @@ def ev_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ev_sliding_hourly",
     sql=f"""
     SELECT window_start, CAST(count(*) AS BIGINT) AS n_events,
-           {_dsum_sql("value")} AS total_value
+           {_sql_dsum("value")} AS total_value
     FROM (SELECT unnest([time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)),
                          time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP))
                            - INTERVAL 30 MINUTE]) AS window_start,

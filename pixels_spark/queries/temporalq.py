@@ -16,20 +16,13 @@ accumulated sum convention (FIXTURES.md).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.temporal import asof_join, range_join
+from ._common import _dsum, _sql_dsum
 from .registry import declare
-
-
-def _dsum(c: Column) -> Column:
-    return F.sum(c.cast("decimal(18,6)")).cast("double")
-
-
-def _sql_dsum(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @declare(

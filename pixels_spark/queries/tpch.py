@@ -20,7 +20,7 @@ configured threshold (session.py), mirroring
 Determinism: all money aggregations accumulate in DECIMAL(18,6) (exact,
 associative → order-independent) and cast the total back to DOUBLE, so
 Spark's partition-order-dependent partial aggregation matches the DuckDB
-oracle bit-for-bit. See ``_dsum``.
+oracle bit-for-bit. See ``_common._dsum``.
 
 Scale notes: every query here is a pure declarative plan — no collect(), no
 Python UDFs — so at 100 TB the same code yields shuffle-partitioned hash
@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dsum, _sql_dsum
 from .registry import declare
 
 
@@ -44,25 +45,6 @@ def _ts(s: str) -> Column:
 
 def _disc_price() -> Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-def _dsum(c: Column) -> Column:
-    """Order-independent sum of a double expression.
-
-    Double addition is not associative; Spark's partial-agg merge order is
-    nondeterministic while the DuckDB oracle sums in file order, so raw
-    ``sum(double)`` can differ at the 9th significant digit (the driver's
-    hash granularity). Accumulating in DECIMAL(18,6) — exact and associative
-    — and casting the total back to double is bit-identical on both engines
-    in any order. (The oracle SQL mirrors this:
-    ``CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE)``.)
-    """
-    return F.sum(c.cast("decimal(18,6)")).cast("double")
-
-
-# SQL fragment mirroring _dsum
-def _sql_dsum(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 _DISC = "l_extendedprice * (1 - l_discount)"

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dsum, _sql_dsum
 from .registry import declare
 
 _PS_CTE = """
@@ -72,13 +73,6 @@ def load_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         (((k * 53 + i * 19) % 100000).cast("double") / 100).alias("ps_supplycost"),
         "p_brand", "p_type", "p_size", "p_name",
     )
-
-
-def _dsum(c):
-    return F.sum(c.cast("decimal(18,6)")).cast("double")
-
-
-_SQL_DSUM = "CAST(sum(CAST({e} AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 @declare(
@@ -154,11 +148,11 @@ def tpch_q2_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN nation n ON n.n_nationkey = s.s_nationkey
       WHERE n.n_name = 'NATION_3')
     SELECT ps_partkey,
-           {_SQL_DSUM.format(e="ps_supplycost * ps_availqty")} AS val
+           {_sql_dsum("ps_supplycost * ps_availqty")} AS val
     FROM nat_ps
     GROUP BY ps_partkey
-    HAVING {_SQL_DSUM.format(e="ps_supplycost * ps_availqty")} >
-           (SELECT {_SQL_DSUM.format(e="ps_supplycost * ps_availqty")} * 0.0001
+    HAVING {_sql_dsum("ps_supplycost * ps_availqty")} >
+           (SELECT {_sql_dsum("ps_supplycost * ps_availqty")} * 0.0001
             FROM nat_ps)
     ORDER BY val DESC, ps_partkey
     """,
@@ -236,7 +230,7 @@ def tpch_q16_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     + f"""
     , qty AS (
       SELECT l_partkey, l_suppkey,
-             {_SQL_DSUM.format(e="l_quantity")} * 0.5 AS half_qty
+             {_sql_dsum("l_quantity")} * 0.5 AS half_qty
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
@@ -298,7 +292,7 @@ def tpch_q20_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=_PS_CTE
     + f"""
     SELECT nation, o_year,
-           {_SQL_DSUM.format(e="amount")} AS sum_profit
+           {_sql_dsum("amount")} AS sum_profit
     FROM (SELECT n.n_name AS nation,
                  CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
                  l.l_extendedprice * (1 - l.l_discount)

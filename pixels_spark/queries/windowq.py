@@ -16,15 +16,12 @@ with 10^9 events) are the hazard at 100 TB; mitigate by bounding frames
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ._common import _dec
 from .registry import declare
-
-
-def _dec(c: Column) -> Column:
-    return c.cast("decimal(18,6)")
 
 
 @declare(

@@ -87,6 +87,23 @@ def test_pagerank_oracle_text_runs_on_spark_sql(spark, sf_dir):
     assert via_sql == via_df
 
 
+def test_cs_edges_distinct_runs_on_integer_keys(spark, sf_dir):
+    """Plan-shape pin for the r12 narrow-type form: the customer–supplier
+    edge distinct aggregates the raw integer keys and tags them after, so
+    its exchange carries two longs, not two concatenated strings. Seven
+    graph queries build their edge set through ``cs_edges``."""
+    import re
+
+    from pixels_spark.queries.graphq import cs_edges
+
+    plan = cs_edges(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    keys = [
+        [re.sub(r"#\d+L?$", "", k.strip()) for k in ks.split(",")]
+        for ks in re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+    ]
+    assert keys and all(k == ["o_custkey", "l_suppkey"] for k in keys), plan
+
+
 def test_pagerank_empty_graph_and_bad_iterations(spark):
     import pytest as _pt
 

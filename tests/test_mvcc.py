@@ -278,15 +278,15 @@ def test_point_lookup_reaches_rows_of_unindexed_commits(spark, tmp_path):
     assert t.point_lookup(999).count() == 0
 
 
-def test_sqlite_index_backend_full_lifecycle(spark, sf_dir, tmp_path):
-    """The SQLite manifest backend (≈ the reference's SqlitePointIndex
-    flavor) must serve the same indexed lifecycle as the JSON default:
-    selective point lookups, vacuum pruning, unindexed-commit fallback."""
+def test_index_manifest_full_lifecycle(spark, sf_dir, tmp_path):
+    """The point-index manifest serves the whole indexed lifecycle:
+    selective point lookups, then vacuum emptying the manifest, after
+    which an absent key is authoritative-empty."""
     events = load_table(spark, sf_dir, "events").limit(50).cache()
-    t = MvccTable(spark, str(tmp_path / "sq"), key_col="event_id",
-                  indexed=True, index_files=2, index_backend="sqlite")
+    t = MvccTable(spark, str(tmp_path / "ix"), key_col="event_id",
+                  indexed=True, index_files=2)
     t.insert(events)
-    assert t.index_path.endswith(".db")
+    assert t.index_path.endswith(".json")
     key = events.orderBy("event_id").first().event_id
     hit = t.point_lookup(key).collect()
     assert len(hit) == 1 and hit[0].event_id == key
@@ -302,13 +302,6 @@ def test_sqlite_index_backend_full_lifecycle(spark, sf_dir, tmp_path):
     assert t.manifest.load() == []
     # absent key on the (complete) empty manifest is authoritative-empty
     assert t.point_lookup(key).count() == 0
-
-
-def test_bad_index_backend_rejected(spark, tmp_path):
-    import pytest
-
-    with pytest.raises(ValueError, match="index_backend"):
-        MvccTable(spark, str(tmp_path / "x"), key_col="k", index_backend="rocksdb")
 
 
 def test_merge_upsert_semantics(spark, tmp_path):
