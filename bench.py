@@ -6,11 +6,17 @@ Prints ONE JSON line:
    "queries": {"tpch_q1": sec, ...}, "sf": 0.1}
 
 Execution is forced with the noop sink (full pipeline runs, nothing
-collected) except for LIMIT queries where collect() is the natural sink.
+collected).
+
+``python bench.py [-n N] q1 q2 ...`` times only the named queries (N
+passes, default 3) and prints one line per query with its best, every
+run and one pass's Spark jobs/stages/tasks; it writes no contract line
+and no BENCHLOG.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -281,6 +287,54 @@ def _consume(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def timed_runs(spark, registry, staged_dir: str, names, passes: int):
+    """The one timed-query loop: warm up once on tpch_q6, then for each
+    pass and each name run the query through the noop sink and yield
+    ``(name, seconds)``. Each query's jobs carry its name as job group.
+
+    The warm-up keeps first-call JIT/planning setup out of the first
+    timed query. After each run the cache is cleared: several operators
+    persist small frames inside their plans (co-moment matrices,
+    value-grain counts) and cannot unpersist before the caller executes,
+    so ~100 queries × N passes would otherwise accumulate orphaned caches
+    in the JVM heap (measured: vec_near_dup_cells 71.6 s in-suite vs
+    4.3 s standalone at 5×). Per-query timing is unaffected: each run
+    builds and uses its OWN caches within the run."""
+    sc = spark.sparkContext
+    _consume(registry["tpch_q6"].fn(spark, staged_dir))
+    try:
+        for _pass in range(passes):
+            for name in names:
+                fn = registry[name].fn
+                sc.setJobGroup(name, name)
+                t0 = time.perf_counter()
+                _consume(fn(spark, staged_dir))
+                sec = round(time.perf_counter() - t0, 4)
+                spark.catalog.clearCache()
+                yield name, sec
+    finally:
+        # the group is thread-local and sticky: untag what runs next
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def profile_runs(spark, registry, staged_dir: str, names, passes: int):
+    """``timed_runs`` plus each run's Spark job, stage and task counts,
+    read from the status tracker by job group (works with the UI off).
+    Returns {name: [(seconds, jobs, stages, tasks) per pass]}."""
+    tracker = spark.sparkContext.statusTracker()
+    seen = {name: set(tracker.getJobIdsForGroup(name)) for name in names}
+    out: dict[str, list[tuple[float, int, int, int]]] = {name: [] for name in names}
+    for name, sec in timed_runs(spark, registry, staged_dir, names, passes):
+        jobs = set(tracker.getJobIdsForGroup(name)) - seen[name]
+        seen[name] |= jobs
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        tasks = sum(
+            info.numTasks for s in stages if (info := tracker.getStageInfo(s))
+        )
+        out[name].append((sec, len(jobs), len(stages), tasks))
+    return out
+
+
 def stage_tables(spark, sf_dir: str, cache_root: str) -> str:
     """LOAD the fixture tables into the engine's own layout before timing.
 
@@ -331,15 +385,17 @@ def prepare(spark, sf_dir: str, cache_root: str | None = None):
     staged_dir = stage_tables(spark, sf_dir, cache_root)
     load_sec = round(time.perf_counter() - t0, 4)
 
+    # Every derived artifact is built through storage.derived.ensure_derived,
+    # whose default cache root is this env var: pinning it here makes the
+    # timed queries (which call the builders with the default root) resolve
+    # the SAME cache keys as these prebuilds and get pure cache hits.
+    os.environ["PIXELS_SPARK_DERIVED_CACHE"] = os.path.join(cache_root, "derived")
+
     # build the IVF ANN index once during staging (k-means + partitioned
     # write = index construction, amortized across queries exactly like
     # LOAD); the timed vec_ivf_probe entry then measures the serving path.
-    # The cache root is shared via the env var so the timed query resolves
-    # the SAME cache key as this prebuild (vec_ivf_probe calls
-    # ensure_ivf_index with the default root) and gets a pure cache hit.
     from pixels_spark.queries.vector_search import ensure_ivf_index
 
-    os.environ["PIXELS_SPARK_IVF_CACHE"] = os.path.join(cache_root, "ivf")
     t0 = time.perf_counter()
     ensure_ivf_index(spark, staged_dir)
     ivf_build_sec = round(time.perf_counter() - t0, 4)
@@ -353,7 +409,6 @@ def prepare(spark, sf_dir: str, cache_root: str | None = None):
     from pixels_spark.queries.structq import ev_struct_path
     from pixels_spark.queries.vector_search import ensure_pq_index
 
-    os.environ["PIXELS_SPARK_DERIVED_CACHE"] = os.path.join(cache_root, "derived")
     t0 = time.perf_counter()
     money_path(spark, staged_dir)
     ev_struct_path(spark, staged_dir)
@@ -365,10 +420,20 @@ def prepare(spark, sf_dir: str, cache_root: str | None = None):
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("-n", type=int, help="passes over the named queries (default 3)")
+    ap.add_argument("names", nargs="*", help="time only these queries")
+    args = ap.parse_args()
+    registry = load_all_modules()
+    unknown = [name for name in args.names if name not in registry]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+    if args.n is not None and not args.names:
+        ap.error("-n applies to named queries only")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", config.DEFAULT_SF_DIR)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    registry = load_all_modules()
 
     spark = local_session()
     spark.sparkContext.setLogLevel("ERROR")
@@ -377,9 +442,18 @@ def main() -> None:
         spark, sf_dir
     )
 
-    # warm the JVM/catalyst once on a cheap query so per-query times measure
-    # execution, not first-call JIT/planning setup
-    _consume(registry["tpch_q6"].fn(spark, staged_dir))
+    if args.names:
+        profiles = profile_runs(spark, registry, staged_dir, args.names, args.n or 3)
+        for name, runs in profiles.items():
+            secs = [r[0] for r in runs]
+            _, jobs, stages, tasks = runs[-1]
+            print(
+                f"{name}: best={min(secs)} runs={secs} "
+                f"jobs={jobs} stages={stages} tasks={tasks}",
+                flush=True,
+            )
+        spark.stop()
+        return
 
     # best-of-3: the bench box is a shared host — single-shot timings can
     # land in a transient noise window (measured: the same suite at 45.6s
@@ -387,19 +461,8 @@ def main() -> None:
     # 2.9x on one query). Three full passes, per-query min, so the number
     # reflects the plan, not the neighbor (VERDICT r5 task #6).
     all_runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _pass in range(3):
-        for name in HEADLINE:
-            fn = registry[name].fn
-            t0 = time.perf_counter()
-            _consume(fn(spark, staged_dir))
-            all_runs[name].append(round(time.perf_counter() - t0, 4))
-            # several operators persist small frames inside their plans
-            # (co-moment matrices, value-grain counts) and cannot
-            # unpersist before the caller executes; drop them so ~90
-            # queries × 3 passes don't accumulate orphaned caches in the
-            # driver heap. Per-query timing is unaffected: each timed run
-            # builds and uses its OWN caches within the run.
-            spark.catalog.clearCache()
+    for name, sec in timed_runs(spark, registry, staged_dir, HEADLINE, 3):
+        all_runs[name].append(sec)
     timings = {name: min(runs) for name, runs in all_runs.items()}
 
     total = round(sum(timings.values()), 4)
@@ -489,8 +552,8 @@ def write_benchlog(
         "`prev s`/`Δ×` compare to the best-of-3 of the previous committed",
         "run (blank = new query).",
         "",
-        "Fixed-cost attribution (VERDICT r10 task #5, measured by",
-        "`tools/bench_overhead.py` r11): a compute-free marker query",
+        "Fixed-cost attribution (VERDICT r10 task #5, the r11",
+        "measurement): a compute-free marker query",
         "through the same noop sink costs 30-80 ms and stays FLAT across",
         "all 115 queries of a pass (fit slope ~0 us/query) — there is NO",
         "session-age overhead growth (no listener/state accumulation).",

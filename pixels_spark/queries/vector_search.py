@@ -589,19 +589,14 @@ def ensure_ivf_index(
     LOAD), then serve every query from ``ivf_probe_index`` whose scan is
     partition-pruned to the probed cells. The build-once/fingerprint-key/
     atomic-rename mechanics live in ``storage.derived.ensure_derived``
-    (shared with the PQ and money/ev_struct builds); the legacy
-    ``PIXELS_SPARK_IVF_CACHE`` env var still selects the cache root (the
-    bench pins it so its prebuild and the timed probe share a key).
+    (shared with the PQ, money/ev_struct and rec_model builds), so a
+    ``None`` ``cache_root`` falls back to ``PIXELS_SPARK_DERIVED_CACHE``
+    like theirs (the bench pins it so its prebuild and the timed probe
+    share a key).
     """
     import os
-    import tempfile
 
     from ..storage.derived import ensure_derived
-
-    root = cache_root or os.environ.get(
-        "PIXELS_SPARK_IVF_CACHE",
-        os.path.join(tempfile.gettempdir(), "pixels_spark_ivf"),
-    )
 
     def build(sp, tmp):
         e = load_table(sp, sf_dir, "embeddings")
@@ -621,7 +616,7 @@ def ensure_ivf_index(
         source_paths=[table_path(sf_dir, "embeddings")],
         build=build,
         params=f"c{n_cells}_i{iterations}_a{n_assign}_v2",
-        cache_root=root,
+        cache_root=cache_root,
     )
     return os.path.join(dest, "index"), os.path.join(dest, "centroids.parquet")
 
