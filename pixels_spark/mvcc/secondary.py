@@ -158,9 +158,8 @@ class SecondaryIndex:
             # unindexed commits present → correct-but-unpruned fallback
             return t.read_latest_version(snapshot_ts).filter(pred)
         cands = self._candidate_files(match, snapshot_ts)
-        empty = t.read_latest_version(snapshot_ts).filter(pred).limit(0)
         if not cands:
-            return empty
+            return t._empty_latest()
         # step 1: candidate primary keys (≈ getRowIds). Point-shaped
         # lookups get a driver-side list (mirrors the reference's
         # List<Long> return) that feeds the primary-manifest file pruning;
@@ -174,7 +173,7 @@ class SecondaryIndex:
         )
         keys = [r[0] for r in cand_keys_df.limit(self.max_candidates + 1).collect()]
         if not keys:
-            return empty
+            return t._empty_latest()
         if len(keys) > self.max_candidates or not (
             t.indexed and t.manifest.exists()
         ):
@@ -191,7 +190,7 @@ class SecondaryIndex:
             }
         )
         if not files:
-            return empty
+            return t._empty_latest()
         visible = (
             t._read_parquet(*files)
             .filter(F.col(COMMIT_TS) <= snapshot_ts)

@@ -13,8 +13,12 @@ Reference mapping (SURVEY.md §2.9-2.10):
   (``PixelsRecordReaderImpl.java:512-545, 1104-1203``).
 - UPDATE = delete + insert in one transaction (README.md:34-36 CDC mirror).
 - point lookup by key ≈ SinglePointIndex.getUniqueRowId
-  (``pixels-common/.../index/SinglePointIndex.java:108``) — served by
-  parquet min/max pruning on the sorted key column instead of RocksDB.
+  (``pixels-common/.../index/SinglePointIndex.java:108``) then the
+  visibility check (``RGVisibility.java:144-158``): on an indexed table the
+  manifest maps the key to files, the driver reads only their [key, ts]
+  columns (parquet stats + the in-file sort prune the rest) and the
+  tombstones to pick the one visible version, and Spark scans only that
+  version — no shuffle, instead of RocksDB.
 
 Storage layout: append-only parquet under ``<root>/data/`` (one subdir per
 commit → snapshot filtering can prune whole commit dirs by path), deletes
@@ -347,11 +351,39 @@ class MvccTable:
         return ctx.timestamp
 
     # -- read path ---------------------------------------------------------
+    def _tombstone_files(self, after: int = -1, upto: int | None = None) -> list[str]:
+        """Parquet files of the tombstone commits ``deletes/_commit=<ts>``
+        with ``after < ts <= upto``, oldest commit first."""
+        if not os.path.isdir(self.delete_dir):
+            return []
+        commits = sorted(
+            (int(e.split("=", 1)[1]), os.path.join(self.delete_dir, e))
+            for e in os.listdir(self.delete_dir)
+            if e.startswith("_commit=")
+        )
+        return [
+            os.path.join(d, f)
+            for ts, d in commits
+            if after < ts and (upto is None or ts <= upto)
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+
     def _deletes(self) -> DataFrame | None:
-        if not os.path.isdir(self.delete_dir) or not os.listdir(self.delete_dir):
+        files = self._tombstone_files()
+        if not files:
             return None
-        return self.spark.read.option("basePath", self.delete_dir).parquet(
-            self.delete_dir
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        # the one-footer schema Spark would infer, read on the driver: an
+        # inferring read runs a Spark job on every call; `_commit` is
+        # still discovered from the paths as a partition column
+        schema = from_arrow_schema(pq.read_schema(files[0]))
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.delete_dir)
+            .parquet(self.delete_dir)
         )
 
     # -- schema evolution --------------------------------------------------
@@ -520,6 +552,22 @@ class MvccTable:
             )
             .select(*w_cols, COMMIT_TS)
         )
+
+    def _latest_schema(self):
+        """``latest_only``'s output schema: the persisted columns with
+        ``_commit_ts`` moved last, all nullable as a file scan reads them."""
+        from pyspark.sql.types import StructField, StructType
+
+        ps = self.persisted_schema()
+        if ps is None:
+            return StructType()
+        fields = [f for f in ps.fields if f.name != COMMIT_TS] + [ps[COMMIT_TS]]
+        return StructType([StructField(f.name, f.dataType, True) for f in fields])
+
+    def _empty_latest(self) -> DataFrame:
+        """Zero rows in ``latest_only``'s schema; the ``limit(0)`` lets a
+        collect finish without running a Spark job."""
+        return self.spark.createDataFrame([], self._latest_schema()).limit(0)
 
     def read_latest_version(
         self, snapshot_ts: int | None = None, keys: DataFrame | None = None
@@ -927,13 +975,19 @@ class MvccTable:
         return removed
 
     def point_lookup(self, key, snapshot_ts: int | None = None) -> DataFrame:
-        """Primary-key point lookup (≈ SinglePointIndex.getUniqueRowId:108).
+        """Primary-key point lookup: index → row location → visibility
+        check (≈ SinglePointIndex.getUniqueRowId:108, then
+        RGVisibility.java:144-158), with the newest visible version as
+        the answer (``latest_only``'s columns and rows).
 
         On an ``indexed`` table the manifest resolves the key to the files
-        whose [min,max] range covers it — the scan opens ONLY those files
-        (key→RowLocation at file granularity; the in-file sort + parquet
-        row-group stats resolve the rest). Unindexed tables fall back to
-        partition-column + min/max pruning over the full layout."""
+        whose [min,max] range covers it, and ``_visible_version`` picks the
+        version on the driver from those files' [key, ts] columns and the
+        tombstones. Spark then scans only the winning file(s) for that
+        version: one job, no shuffle; a deleted or absent key returns an
+        empty frame that runs no job. Unindexed tables, and tables with a
+        commit the manifest lacks, fall back to the merge-on-read
+        ``read_latest_version`` filtered to the key."""
         if snapshot_ts is None:
             snapshot_ts = self.trans.high_watermark
         if self.persisted_schema() is None:
@@ -964,16 +1018,56 @@ class MvccTable:
             for e in idx
             if e["commit_ts"] <= snapshot_ts and e["min"] <= key <= e["max"]
         ]
-        if not cands:
-            return self.read_latest_version(snapshot_ts).filter(
-                F.col(self.key_col) == key
-            ).limit(0)
-        visible = (
-            self._read_parquet(*cands)
-            .filter(F.col(COMMIT_TS) <= snapshot_ts)
-            .filter(F.col(self.key_col) == key)
+        win = self._visible_version(key, snapshot_ts, cands)
+        if win is None:
+            return self._empty_latest()
+        win_ts, win_files = win
+        return (
+            self._read_parquet(*win_files)
+            .filter((F.col(COMMIT_TS) == win_ts) & (F.col(self.key_col) == key))
+            .select(*self._latest_schema().fieldNames())
         )
-        visible = self.apply_delete_visibility(
-            visible, snapshot_ts, key_pred=F.col(self.key_col) == key
-        )
-        return self.latest_only(visible)
+
+    def _visible_version(
+        self, key, snapshot_ts: int, files: list[str]
+    ) -> tuple[int, list[str]] | None:
+        """Resolve ``key``'s visible version on the driver, with no Spark
+        job: the newest ``_commit_ts <= snapshot_ts`` among ``files`` and
+        the files holding it, or None when the key has no version there or
+        a tombstone hides it.
+
+        Each file's [key, ts] columns are read through pyarrow with the
+        key and snapshot as filters, so row-group stats and the in-file
+        sort skip the rest. The per-row ts is what counts, not the
+        manifest's: ``compact_history`` keeps original ts under
+        ``_commit=<retain>``. Visibility is ``apply_delete_visibility``'s
+        strict <: a delete at T hides versions committed before T, so only
+        tombstone commits in (winning ts, snapshot_ts] can hide the winner,
+        and an UPDATE's delete+insert at one ts stays visible. Tombstone
+        files are read one at a time because their key type may differ
+        between commits (``delete`` writes Python ints as long)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def newest(path: str, ts_col: str, after: int = -1):
+            t = pq.read_table(
+                path,
+                columns=[self.key_col, ts_col],
+                filters=[
+                    (self.key_col, "==", key),
+                    (ts_col, ">", after),
+                    (ts_col, "<=", snapshot_ts),
+                ],
+            )
+            return pc.max(t[ts_col]).as_py()
+
+        found = {p: ts for p in files if (ts := newest(p, COMMIT_TS)) is not None}
+        if not found:
+            return None
+        win_ts = max(found.values())
+        if any(
+            newest(p, DELETED_TS, after=win_ts) is not None
+            for p in self._tombstone_files(win_ts, snapshot_ts)
+        ):
+            return None
+        return win_ts, [p for p, ts in found.items() if ts == win_ts]

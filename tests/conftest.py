@@ -23,10 +23,14 @@ _SLOW_FILES = {
     "test_random_funnel.py",      # 22s   funnel tie fuzz vs oracle
     "test_random_spans.py",       # 19s   span-cut python-reference fuzz
     "test_random_temperature.py", # 12s   temperature-mix kept-set fuzz
-    "test_mvcc_model.py",         # 664s  MVCC dict-model history fuzzes
 }
 # Individual randomized/property heavyweights in otherwise-fast files:
 _SLOW_TESTS = {
+    # 664s together: MVCC dict-model history fuzzes (the file's indexed
+    # point-lookup fuzz stays in the fast tier)
+    ("test_mvcc_model.py", "test_random_histories_match_model"),
+    ("test_mvcc_model.py", "test_snapshot_diff_matches_dict_model"),
+    ("test_mvcc_model.py", "test_full_surface_model_fuzz"),
     ("test_graph.py", "test_equals_id_ordered_on_random_graphs"),       # 61s
     ("test_graph.py", "test_pagerank_matches_matrix_oracle_on_random_directed_graphs"),  # 19s
     ("test_graph.py", "test_weighted_pagerank_matches_dense_reference"),  # 15s

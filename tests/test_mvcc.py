@@ -173,6 +173,68 @@ def test_indexed_lookup_respects_deletes_and_versions(spark, sf_dir, tmp_path):
     assert len(old) == 1 and old[0].value != 777.0
 
 
+def _jobs_run(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, read from
+    the status tracker by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_indexed_point_lookup_job_counts(spark, tmp_path):
+    """The indexed lookup resolves the visible version on the driver: a
+    hit scans that one version in exactly one job with no shuffle; a
+    deleted or absent key runs no job at all."""
+    t = MvccTable(
+        spark, str(tmp_path / "jc"), key_col="k", indexed=True, index_files=2
+    )
+    t.insert(spark.createDataFrame([(k, float(k)) for k in range(40)], ["k", "v"]))
+    t.update(spark.createDataFrame([(5, 50.0), (30, 300.0)], ["k", "v"]))
+    t.delete([7, 31])
+
+    hit = t.point_lookup(5)
+    rows, jobs = _jobs_run(spark, hit.collect)
+    assert [(r.k, r.v) for r in rows] == [(5, 50.0)]
+    assert jobs == 1
+    assert "Exchange" not in hit._jdf.queryExecution().executedPlan().toString()
+    for gone in (7, 999):
+        rows, jobs = _jobs_run(spark, t.point_lookup(gone).collect)
+        assert rows == [] and jobs == 0, gone
+
+
+@pytest.mark.parametrize(
+    "key_type, keys", [("int", [1, 2]), ("bigint", [1, 2]), ("string", ["a", "b"])]
+)
+def test_tombstone_frame_keeps_key_type_without_a_job(
+    spark, tmp_path, key_type, keys
+):
+    """The tombstone frame takes its schema from one footer on the driver
+    (no schema-inference job), keeps the key type the tombstones were
+    written with, and still discovers `_commit` as a partition column."""
+    from pyspark.sql.types import IntegerType, LongType, StringType
+
+    t = MvccTable(spark, str(tmp_path / "tomb"), key_col="k")
+    kdf = spark.createDataFrame([(k,) for k in keys], f"k {key_type}")
+    t.insert(kdf)
+    t.delete(kdf)
+    dels, jobs = _jobs_run(spark, t._deletes)
+    assert jobs == 0
+    want = {"int": IntegerType(), "bigint": LongType(), "string": StringType()}
+    assert dels.schema["k"].dataType == want[key_type]
+    assert "_commit" in dels.columns
+    pruned = dels.filter(F.col("_commit") <= 0)
+    assert pruned.count() == 0 and dels.count() == len(keys)
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "_commit" in plan, plan
+
+
 def test_insert_and_snapshot_isolation(table, events):
     t1 = table.insert(events.filter(F.col("event_id") < 50))
     t2 = table.insert(events.filter(F.col("event_id") >= 50))

@@ -364,3 +364,97 @@ def test_full_surface_model_fuzz(spark, tmp_path):
     assert ops_hit >= {
         "insert", "update", "delete", "merge", "evolve", "compact", "vacuum"
     }
+
+
+# ---------------------------------------------------------------------------
+# Indexed-path fuzz: the same random surface on an INDEXED table (two files
+# per commit), so random histories reach the manifest-driven point lookup.
+# Every key of the keyspace plus one absent key is looked up at every
+# still-travelable ts and must equal the merge-on-read latest-version read
+# (rows, column order, types) and the model.
+
+N_INDEXED_SEQUENCES = 2
+
+
+def _lookup_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_indexed_point_lookup_model_fuzz(spark, tmp_path):
+    import random
+
+    keyspace = list(range(8))
+    absent = 99
+    for seq in range(N_INDEXED_SEQUENCES):
+        rng = random.Random(4000 + seq)
+        t = MvccTable(
+            spark, str(tmp_path / f"ix{seq}"), key_col="k",
+            indexed=True, index_files=2,
+        )
+        model = FullModel()
+        log: list[int] = []
+        evolved = 0
+        # a leading insert, then every op once in a random order
+        plan = ["insert", "update", "delete", "merge", "evolve", "compact",
+                "vacuum"]
+        rng.shuffle(plan)
+        for step, op in enumerate(["insert"] + plan):
+            keys = rng.sample(keyspace, rng.randint(1, 4))
+            if op in ("insert", "evolve"):
+                col = None
+                if op == "evolve":
+                    evolved += 1
+                    col = f"x{evolved}"
+                df, rows = _mk_rows(spark, keys, step, extra_col=col)
+                ts = t.insert(df)
+                model.insert(rows, ts)
+            elif op == "update":
+                df, rows = _mk_rows(spark, keys, step)
+                ts = t.update(df)
+                model.delete(keys, ts)
+                model.insert(rows, ts)
+            elif op == "delete":
+                ts = t.delete(keys)
+                model.delete(keys, ts)
+            elif op == "merge":
+                df, rows = _mk_rows(spark, keys, step)
+                present = set(model.latest(t.trans.high_watermark))
+                full_sync = rng.random() < 0.3
+                ts = t.merge(df, delete_unmatched_target=full_sync)
+                rowmap = dict(rows)
+                gone = sorted(present - set(keys)) if full_sync else []
+                model.delete([k for k in keys if k in present] + gone, ts)
+                model.insert([(k, rowmap[k]) for k in keys], ts)
+            elif op == "compact":
+                retain = rng.choice(log)
+                t.compact_history(retain_ts=retain)
+                model.compact(retain)
+                continue
+            else:  # vacuum
+                retain = rng.choice(log)
+                t.vacuum(retain)
+                model.vacuum(retain)
+                continue
+            log.append(ts)
+
+        for ts in [ts for ts in log if ts >= model.min_ts]:
+            latest = t.read_latest_version(ts)
+            by_key: dict = {}
+            for r in latest.collect():
+                by_key.setdefault(r["k"], []).append(tuple(r))
+            want_latest = model.latest(ts)
+            for k in keyspace + [absent]:
+                got = t.point_lookup(k, ts)
+                where = f"seq={seq} point_lookup {k}@{ts}"
+                assert [(f.name, f.dataType) for f in got.schema] == [
+                    (f.name, f.dataType) for f in latest.schema
+                ], where
+                rows = _lookup_rows(got)
+                assert rows == sorted(by_key.get(k, [])), where
+                want = want_latest.get(k)
+                if want is None:
+                    assert rows == [], where
+                else:
+                    assert len(rows) == 1, where
+                    r = dict(zip(got.columns, rows[0]))
+                    assert {c: r[c] for c in want} == want, where
