@@ -376,10 +376,6 @@ def test_full_surface_model_fuzz(spark, tmp_path):
 N_INDEXED_SEQUENCES = 2
 
 
-def _lookup_rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 def test_indexed_point_lookup_model_fuzz(spark, tmp_path):
     import random
 
@@ -449,7 +445,7 @@ def test_indexed_point_lookup_model_fuzz(spark, tmp_path):
                 assert [(f.name, f.dataType) for f in got.schema] == [
                     (f.name, f.dataType) for f in latest.schema
                 ], where
-                rows = _lookup_rows(got)
+                rows = sorted(tuple(r) for r in got.collect())
                 assert rows == sorted(by_key.get(k, [])), where
                 want = want_latest.get(k)
                 if want is None:
