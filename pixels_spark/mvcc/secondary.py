@@ -10,11 +10,14 @@ the main index. This mirrors that two-step shape at file granularity:
    to files — a lookup scans ONLY covering files and yields candidate
    PRIMARY KEYS (≈ getRowIds);
 2. the candidates resolve through the table's PRIMARY manifest to the
-   files holding every version of those keys, where MVCC visibility +
-   latest-version rules apply (shared with ``MvccTable`` — one home for
-   the conventions), and the secondary predicate is re-checked against
-   the LATEST version (a key whose newest version no longer matches the
-   value must not surface — the classic stale-secondary trap).
+   files holding their versions, and the table's driver-side resolver
+   (``MvccTable._visible_versions``, one home for the visibility and
+   latest-version rules) picks each key's visible version and reads its
+   rows on the driver;
+3. the secondary predicate is re-checked against those LATEST versions
+   (a key whose newest version no longer matches the value must not
+   surface — the classic stale-secondary trap). Past step 1's
+   candidate-key collect, a point-shaped lookup runs 0 Spark jobs.
 
 Selectivity caveat (honest, documented): the reference's KV index is
 row-granular and clustering-independent; a file-range index only prunes
@@ -34,7 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .table import COMMIT_TS, MvccTable, _JsonManifest, footer_range_entries
+from .table import COMMIT_TS, MvccTable, _commits, _JsonManifest, footer_range_entries
 
 
 class SecondaryIndex:
@@ -69,16 +72,13 @@ class SecondaryIndex:
         by_ts: dict[int, list[dict]] = {}
         for e in self.manifest.load():
             by_ts.setdefault(e["commit_ts"], []).append(e)
-        dd = self.table.data_dir
-        for entry in sorted(os.listdir(dd)) if os.path.isdir(dd) else []:
-            if entry.startswith("_commit="):
-                ts = int(entry.split("=", 1)[1])
-                es = by_ts.get(ts)
-                if es is not None and any(os.path.exists(e["path"]) for e in es):
-                    continue
-                if es is not None:
-                    self.manifest.remove_commits({ts})
-                self.index_commit(ts)
+        for ts in _commits(self.table.data_dir):
+            es = by_ts.get(ts)
+            if es is not None and any(os.path.exists(e["path"]) for e in es):
+                continue
+            if es is not None:
+                self.manifest.remove_commits({ts})
+            self.index_commit(ts)
 
     # -- lookup ------------------------------------------------------------
     def _covered(self, snapshot_ts: int) -> bool:
@@ -92,14 +92,9 @@ class SecondaryIndex:
             live[e["commit_ts"]] = live.get(e["commit_ts"], False) or os.path.exists(
                 e["path"]
             )
-        dd = self.table.data_dir
-        for entry in os.listdir(dd) if os.path.isdir(dd) else []:
-            if not entry.startswith("_commit="):
-                continue
-            ts = int(entry.split("=", 1)[1])
-            if ts <= snapshot_ts and not live.get(ts, False):
-                return False
-        return True
+        return all(
+            live.get(ts, False) for ts in _commits(self.table.data_dir) if ts <= snapshot_ts
+        )
 
     def candidate_files(self, value, snapshot_ts: int | None = None) -> list[str]:
         return self._candidate_files(
@@ -159,12 +154,14 @@ class SecondaryIndex:
             return t.read_latest_version(snapshot_ts).filter(pred)
         cands = self._candidate_files(match, snapshot_ts)
         if not cands:
-            return t._empty_latest()
+            return t._versions_frame({})
         # step 1: candidate primary keys (≈ getRowIds). Point-shaped
         # lookups get a driver-side list (mirrors the reference's
         # List<Long> return) that feeds the primary-manifest file pruning;
-        # a low-cardinality value whose candidates exceed max_candidates
-        # switches to a distributed semi-join — no unbounded collect.
+        # a low-cardinality value whose candidates exceed max_candidates,
+        # or a table whose primary manifest is absent or lacks a visible
+        # commit, switches to a distributed semi-join — no unbounded
+        # collect, no unreachable rows.
         cand_keys_df = (
             self.table._read_parquet(*cands)
             .filter((F.col(COMMIT_TS) <= snapshot_ts) & pred)
@@ -173,33 +170,15 @@ class SecondaryIndex:
         )
         keys = [r[0] for r in cand_keys_df.limit(self.max_candidates + 1).collect()]
         if not keys:
-            return t._empty_latest()
-        if len(keys) > self.max_candidates or not (
-            t.indexed and t.manifest.exists()
-        ):
+            return t._versions_frame({})
+        files = None
+        if len(keys) <= self.max_candidates:
+            files = t._index_files(keys, snapshot_ts)
+        if files is None:
             visible = t.read(snapshot_ts).join(cand_keys_df, t.key_col, "left_semi")
             return t.latest_only(visible).filter(pred)
-        # step 2: resolve ALL versions of those keys through the primary
-        # manifest (covering files only)
-        files = sorted(
-            {
-                e["path"]
-                for e in t.manifest.load()
-                if e["commit_ts"] <= snapshot_ts
-                and any(e["min"] <= k <= e["max"] for k in keys)
-            }
-        )
-        if not files:
-            return t._empty_latest()
-        visible = (
-            t._read_parquet(*files)
-            .filter(F.col(COMMIT_TS) <= snapshot_ts)
-            .filter(F.col(t.key_col).isin(keys))
-        )
-        # step 3: shared visibility + latest-version rules, THEN re-check
-        # the secondary predicate — a newer version that changed the value
-        # wins (never serve a stale secondary hit)
-        visible = t.apply_delete_visibility(
-            visible, snapshot_ts, key_pred=F.col(t.key_col).isin(keys)
-        )
-        return t.latest_only(visible).filter(pred)
+        # steps 2-3: each key's visible version through the primary
+        # manifest, read on the driver, THEN the secondary predicate — a
+        # newer version that changed the value wins (never serve a stale
+        # secondary hit)
+        return t._versions_frame(t._visible_versions(keys, snapshot_ts, files)).filter(pred)

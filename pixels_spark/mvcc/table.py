@@ -17,8 +17,9 @@ Reference mapping (SURVEY.md §2.9-2.10):
   visibility check (``RGVisibility.java:144-158``): on an indexed table the
   manifest maps the key to files, the driver reads only their [key, ts]
   columns (parquet stats + the in-file sort prune the rest) and the
-  tombstones to pick the one visible version, and Spark scans only that
-  version — no shuffle, instead of RocksDB.
+  tombstones to pick the one visible version, then reads that version's
+  rows from the winning file itself and serves them as a local relation —
+  a lookup runs 0 Spark jobs, instead of RocksDB.
 
 Storage layout: append-only parquet under ``<root>/data/`` (one subdir per
 commit → snapshot filtering can prune whole commit dirs by path), deletes
@@ -56,8 +57,6 @@ class _JsonManifest:
         return os.path.exists(self.path)
 
     def load(self) -> list[dict]:
-        import json
-
         if not self.exists():
             return []
         with open(self.path) as f:
@@ -65,7 +64,6 @@ class _JsonManifest:
 
     def _rmw(self, mutate) -> None:
         import fcntl
-        import json
 
         with open(self.path + ".lock", "a") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
@@ -101,6 +99,16 @@ def _remove_commit_dir(path: str, ignore_errors: bool = False) -> None:
                 raise
     else:
         shutil.rmtree(path, ignore_errors=ignore_errors)
+
+
+def _commits(parent: str) -> list[int]:
+    """Timestamps of the ``_commit=<ts>`` directories under ``parent`` (a
+    table's data or deletes directory), ascending; none if it is absent."""
+    if not os.path.isdir(parent):
+        return []
+    return sorted(
+        int(e.split("=", 1)[1]) for e in os.listdir(parent) if e.startswith("_commit=")
+    )
 
 
 def footer_range_entries(commit_dir: str, col: str, ts: int) -> list[dict]:
@@ -354,17 +362,14 @@ class MvccTable:
     def _tombstone_files(self, after: int = -1, upto: int | None = None) -> list[str]:
         """Parquet files of the tombstone commits ``deletes/_commit=<ts>``
         with ``after < ts <= upto``, oldest commit first."""
-        if not os.path.isdir(self.delete_dir):
-            return []
-        commits = sorted(
-            (int(e.split("=", 1)[1]), os.path.join(self.delete_dir, e))
-            for e in os.listdir(self.delete_dir)
-            if e.startswith("_commit=")
-        )
+        dirs = [
+            os.path.join(self.delete_dir, f"_commit={ts}")
+            for ts in _commits(self.delete_dir)
+            if after < ts and (upto is None or ts <= upto)
+        ]
         return [
             os.path.join(d, f)
-            for ts, d in commits
-            if after < ts and (upto is None or ts <= upto)
+            for d in dirs
             for f in sorted(os.listdir(d))
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         ]
@@ -390,15 +395,13 @@ class MvccTable:
     def persisted_schema(self):
         """The table's authoritative footer schema (union of every commit's
         columns, in first-seen order), or None before the first insert."""
-        import json as _json
-
         from pyspark.sql.types import StructType as _ST
 
         path = os.path.join(self.root, "_schema.json")
         if not os.path.exists(path):
             return None
         with open(path) as f:
-            return _ST.fromJson(_json.load(f))
+            return _ST.fromJson(json.load(f))
 
     def _evolve_schema(self, new_schema) -> None:
         """Union-evolve the persisted schema: ADD COLUMN without rewriting
@@ -470,10 +473,7 @@ class MvccTable:
         older than the delete are hidden). Latest-committed by default."""
         if snapshot_ts is None:
             snapshot_ts = self.trans.high_watermark
-        commits = [
-            e for e in os.listdir(self.data_dir) if e.startswith("_commit=")
-        ] if os.path.isdir(self.data_dir) else []
-        if not commits:
+        if not _commits(self.data_dir):
             # empty table (never written, or fully vacuumed): serve the
             # persisted schema with zero rows
             from pyspark.sql.types import StructType as _ST
@@ -496,17 +496,14 @@ class MvccTable:
         )
         return self.apply_delete_visibility(visible, snapshot_ts)
 
-    def apply_delete_visibility(
-        self, visible: DataFrame, snapshot_ts: int, key_pred=None
-    ) -> DataFrame:
+    def apply_delete_visibility(self, visible: DataFrame, snapshot_ts: int) -> DataFrame:
         """Anti-join the delete tombstones visible at ``snapshot_ts`` onto
         ``visible`` — the single home of the visibility convention.
 
         Strict <: a delete at ts T hides versions committed BEFORE T, so a
         delete+insert in one transaction (UPDATE, same ts) leaves the new
         version visible — matching the reference's CDC mirror convention
-        (delete old version, insert new, one commit). ``key_pred`` narrows
-        the tombstone scan for point lookups."""
+        (delete old version, insert new, one commit)."""
         dels = self._deletes()
         if dels is None:
             return visible
@@ -514,11 +511,7 @@ class MvccTable:
             dels.filter(F.col("_commit") <= snapshot_ts)
             .drop("_commit")
             .filter(F.col(DELETED_TS) <= snapshot_ts)
-        )
-        if key_pred is not None:
-            d = d.filter(key_pred)
-        d = (
-            d.groupBy(self.key_col)
+            .groupBy(self.key_col)
             .agg(F.max(DELETED_TS).alias("_del_ts"))
             .withColumnRenamed(self.key_col, "_del_key")
         )
@@ -555,19 +548,27 @@ class MvccTable:
 
     def _latest_schema(self):
         """``latest_only``'s output schema: the persisted columns with
-        ``_commit_ts`` moved last, all nullable as a file scan reads them."""
-        from pyspark.sql.types import StructField, StructType
+        ``_commit_ts`` moved last, nullable at every nesting level as a
+        file scan reads them."""
+        from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+        def nullable(dt):
+            if isinstance(dt, StructType):
+                return StructType(
+                    [StructField(f.name, nullable(f.dataType), True) for f in dt]
+                )
+            if isinstance(dt, ArrayType):
+                return ArrayType(nullable(dt.elementType), True)
+            if isinstance(dt, MapType):
+                return MapType(nullable(dt.keyType), nullable(dt.valueType), True)
+            return dt
 
         ps = self.persisted_schema()
         if ps is None:
             return StructType()
-        fields = [f for f in ps.fields if f.name != COMMIT_TS] + [ps[COMMIT_TS]]
-        return StructType([StructField(f.name, f.dataType, True) for f in fields])
-
-    def _empty_latest(self) -> DataFrame:
-        """Zero rows in ``latest_only``'s schema; the ``limit(0)`` lets a
-        collect finish without running a Spark job."""
-        return self.spark.createDataFrame([], self._latest_schema()).limit(0)
+        return nullable(
+            StructType([f for f in ps.fields if f.name != COMMIT_TS] + [ps[COMMIT_TS]])
+        )
 
     def read_latest_version(
         self, snapshot_ts: int | None = None, keys: DataFrame | None = None
@@ -786,12 +787,7 @@ class MvccTable:
 
         if snapshot_ts is None:
             snapshot_ts = self.trans.high_watermark
-        commits = (
-            [e for e in os.listdir(self.data_dir) if e.startswith("_commit=")]
-            if os.path.isdir(self.data_dir)
-            else []
-        )
-        if not commits:
+        if not _commits(self.data_dir):
             # never-written (or fully vacuumed) table: empty history with
             # the persisted schema + the SCD2 columns — same guard as read()
             from pyspark.sql.types import StructType as _ST
@@ -891,15 +887,9 @@ class MvccTable:
         into the snapshot or discarded with it. Single-writer op, like
         vacuum. Returns the removed commit timestamps.
         """
-        import shutil
-
         if retain_ts is None:
             retain_ts = self.trans.high_watermark
-        old_ts = [
-            int(e.split("=", 1)[1])
-            for e in (os.listdir(self.data_dir) if os.path.isdir(self.data_dir) else [])
-            if e.startswith("_commit=") and int(e.split("=", 1)[1]) <= retain_ts
-        ]
+        old_ts = [ts for ts in _commits(self.data_dir) if ts <= retain_ts]
         if not old_ts:
             return []
         snap = self.read_latest_version(retain_ts)
@@ -915,10 +905,9 @@ class MvccTable:
         snap.write.mode("overwrite").parquet(tmp_dir)
         for ts in old_ts:
             _remove_commit_dir(os.path.join(self.data_dir, f"_commit={ts}"))
-        if os.path.isdir(self.delete_dir):
-            for e in list(os.listdir(self.delete_dir)):
-                if e.startswith("_commit=") and int(e.split("=", 1)[1]) <= retain_ts:
-                    _remove_commit_dir(os.path.join(self.delete_dir, e))
+        for ts in _commits(self.delete_dir):
+            if ts <= retain_ts:
+                _remove_commit_dir(os.path.join(self.delete_dir, f"_commit={ts}"))
         new_dir = os.path.join(self.data_dir, f"_commit={retain_ts}")
         os.replace(tmp_dir, new_dir)
         if self.manifest.exists():
@@ -938,8 +927,6 @@ class MvccTable:
         Time travel to snapshots older than ``retain_ts`` is forfeited for
         the removed commits — same contract as the reference's GC horizon.
         """
-        import shutil
-
         dels = self._deletes()
         if dels is None or not os.path.isdir(self.data_dir):
             # delete-only table (tombstones but never a data commit, r12
@@ -954,12 +941,10 @@ class MvccTable:
             .agg(F.max(DELETED_TS).alias("_del_ts"))
             .withColumnRenamed(self.key_col, "_del_key")
         )
-        for entry in sorted(os.listdir(self.data_dir)):
-            if not entry.startswith("_commit="):
-                continue
-            ts = int(entry.split("=", 1)[1])
+        for ts in _commits(self.data_dir):
             if ts >= retain_ts:
                 continue
+            entry = f"_commit={ts}"
             part = self._read_parquet(os.path.join(self.data_dir, entry))
             survivors = part.join(
                 d,
@@ -981,12 +966,11 @@ class MvccTable:
         the answer (``latest_only``'s columns and rows).
 
         On an ``indexed`` table the manifest resolves the key to the files
-        whose [min,max] range covers it, and ``_visible_version`` picks the
-        version on the driver from those files' [key, ts] columns and the
-        tombstones. Spark then scans only the winning file(s) for that
-        version: one job, no shuffle; a deleted or absent key returns an
-        empty frame that runs no job. Unindexed tables, and tables with a
-        commit the manifest lacks, fall back to the merge-on-read
+        whose [min,max] range covers it, ``_visible_versions`` picks the
+        version on the driver, and ``_versions_frame`` reads its rows on
+        the driver too: a hit, a deleted key and an absent key all run 0
+        Spark jobs. Unindexed tables, and tables with a commit the
+        manifest lacks, fall back to the merge-on-read
         ``read_latest_version`` filtered to the key."""
         if snapshot_ts is None:
             snapshot_ts = self.trans.high_watermark
@@ -994,80 +978,98 @@ class MvccTable:
             # never-written table (r12 model fuzz): no key column exists
             # yet, so there is nothing a point lookup could match
             return self.read(snapshot_ts)
+        files = self._index_files([key], snapshot_ts)
+        if files is None:
+            return self.read_latest_version(snapshot_ts).filter(
+                F.col(self.key_col) == key
+            )
+        return self._versions_frame(self._visible_versions([key], snapshot_ts, files))
+
+    def _index_files(self, keys: list, snapshot_ts: int) -> list[str] | None:
+        """The manifest's files at or before ``snapshot_ts`` whose key range
+        covers any of ``keys``; None when the table has no manifest, or the
+        manifest lacks a visible commit (one written while the table was
+        opened unindexed, or an interrupted index write), whose rows only
+        a full-layout scan can reach."""
         if not (self.indexed and self.manifest.exists()):
-            return self.read_latest_version(snapshot_ts).filter(
-                F.col(self.key_col) == key
-            )
+            return None
         idx = self.manifest.load()
-        # the manifest is only authoritative when every visible commit is in
-        # it; a commit written while the table was opened unindexed (or an
-        # interrupted index write) must not make its rows silently
-        # unreachable — fall back to the pruned full-layout scan then.
-        indexed_ts = {e["commit_ts"] for e in idx}
-        on_disk = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.data_dir)
-            if e.startswith("_commit=")
-        } if os.path.isdir(self.data_dir) else set()
-        if not {t for t in on_disk if t <= snapshot_ts} <= indexed_ts:
-            return self.read_latest_version(snapshot_ts).filter(
-                F.col(self.key_col) == key
-            )
-        cands = [
+        visible = {ts for ts in _commits(self.data_dir) if ts <= snapshot_ts}
+        if not visible <= {e["commit_ts"] for e in idx}:
+            return None
+        return [
             e["path"]
             for e in idx
-            if e["commit_ts"] <= snapshot_ts and e["min"] <= key <= e["max"]
+            if e["commit_ts"] <= snapshot_ts
+            and any(e["min"] <= k <= e["max"] for k in keys)
         ]
-        win = self._visible_version(key, snapshot_ts, cands)
-        if win is None:
-            return self._empty_latest()
-        win_ts, win_files = win
-        return (
-            self._read_parquet(*win_files)
-            .filter((F.col(COMMIT_TS) == win_ts) & (F.col(self.key_col) == key))
-            .select(*self._latest_schema().fieldNames())
-        )
 
-    def _visible_version(
-        self, key, snapshot_ts: int, files: list[str]
-    ) -> tuple[int, list[str]] | None:
-        """Resolve ``key``'s visible version on the driver, with no Spark
-        job: the newest ``_commit_ts <= snapshot_ts`` among ``files`` and
-        the files holding it, or None when the key has no version there or
-        a tombstone hides it.
+    def _visible_versions(self, keys: list, snapshot_ts: int, files: list[str]) -> dict:
+        """Resolve each key's visible version on the driver, with no Spark
+        job: ``{file: {key: ts}}`` for the files holding a key's newest
+        ``_commit_ts <= snapshot_ts`` among ``files``. A key with no
+        version there, or whose version a tombstone hides, is absent.
 
-        Each file's [key, ts] columns are read through pyarrow with the
-        key and snapshot as filters, so row-group stats and the in-file
-        sort skip the rest. The per-row ts is what counts, not the
+        Each file's [key, ts] columns are read once through pyarrow with
+        the key set and snapshot as filters, so row-group stats and the
+        in-file sort skip the rest. The per-row ts is what counts, not the
         manifest's: ``compact_history`` keeps original ts under
         ``_commit=<retain>``. Visibility is ``apply_delete_visibility``'s
         strict <: a delete at T hides versions committed before T, so only
-        tombstone commits in (winning ts, snapshot_ts] can hide the winner,
-        and an UPDATE's delete+insert at one ts stays visible. Tombstone
-        files are read one at a time because their key type may differ
-        between commits (``delete`` writes Python ints as long)."""
-        import pyarrow.compute as pc
+        tombstones in (winning ts, snapshot_ts] hide a winner, and an
+        UPDATE's delete+insert at one ts stays visible. Tombstone files are
+        read one at a time: their key type may differ between commits."""
         import pyarrow.parquet as pq
 
-        def newest(path: str, ts_col: str, after: int = -1):
+        def newest(path: str, ts_col: str, after: int = -1) -> dict:
             t = pq.read_table(
                 path,
                 columns=[self.key_col, ts_col],
                 filters=[
-                    (self.key_col, "==", key),
+                    (self.key_col, "in", keys),
                     (ts_col, ">", after),
                     (ts_col, "<=", snapshot_ts),
                 ],
             )
-            return pc.max(t[ts_col]).as_py()
+            g = t.group_by(self.key_col).aggregate([(ts_col, "max")])
+            return dict(zip(g[self.key_col].to_pylist(), g[f"{ts_col}_max"].to_pylist()))
 
-        found = {p: ts for p in files if (ts := newest(p, COMMIT_TS)) is not None}
-        if not found:
-            return None
-        win_ts = max(found.values())
-        if any(
-            newest(p, DELETED_TS, after=win_ts) is not None
-            for p in self._tombstone_files(win_ts, snapshot_ts)
-        ):
-            return None
-        return win_ts, [p for p, ts in found.items() if ts == win_ts]
+        found = {p: newest(p, COMMIT_TS) for p in files}
+        win: dict = {}
+        for kts in found.values():
+            for k, ts in kts.items():
+                win[k] = max(ts, win.get(k, ts))
+        after = min(win.values(), default=snapshot_ts)
+        for p in self._tombstone_files(after, snapshot_ts):
+            for k, del_ts in newest(p, DELETED_TS, after).items():
+                if del_ts > win.get(k, del_ts):
+                    del win[k]
+        found = {p: {k: ts for k, ts in kts.items() if win.get(k) == ts} for p, kts in found.items()}
+        return {p: kts for p, kts in found.items() if kts}
+
+    def _versions_frame(self, found: dict) -> DataFrame:
+        """``_visible_versions``' winning rows, read on the driver and
+        served in ``latest_only``'s schema as a local relation, so a
+        collect runs no Spark job. The driver holds only the winning keys'
+        rows at their winning ts; reading each file under that schema
+        fills the columns it predates with typed nulls, as ``read`` does."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = self._latest_schema()
+        target = to_arrow_schema(schema)
+        parts = [target.empty_table()]
+        for p, kts in sorted(found.items()):
+            # every write stamps one ts per key per file (a commit file
+            # holds one ts; compact_history keeps one version per key), so
+            # the two set filters select exactly the winning rows
+            parts.append(pq.read_table(
+                p,
+                schema=target,
+                filters=[
+                    (self.key_col, "in", list(kts)),
+                    (COMMIT_TS, "in", sorted(set(kts.values()))),
+                ],
+            ))
+        return self.spark.createDataFrame(pa.concat_tables(parts), schema)

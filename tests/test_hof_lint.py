@@ -34,7 +34,13 @@ def test_no_hof_binding_defects():
     assert not findings, "\n".join(findings)
 
 
-def test_lint_catches_the_defect_shape():
+def _lint(tmp_path, src: str) -> list[str]:
+    p = tmp_path / "q.py"
+    p.write_text(src)
+    return hof_lint.lint_file(str(p))
+
+
+def test_lint_catches_the_defect_shape(tmp_path):
     # the original quantize_int8 defect, reduced: an F.aggregate-derived
     # name captured inside a transform lambda must be flagged...
     bad = (
@@ -42,15 +48,7 @@ def test_lint_catches_the_defect_shape():
         "    scale = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x)\n"
         "    return F.transform(vec, lambda x: x / scale)\n"
     )
-    import tempfile
-
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as fh:
-        fh.write(bad)
-        p = fh.name
-    try:
-        assert hof_lint.lint_file(p), "defect shape not caught"
-    finally:
-        os.unlink(p)
+    assert _lint(tmp_path, bad), "defect shape not caught"
 
     # ...and the fixed binding pattern (subtree enters as a lambda
     # variable / helper parameter, no expensive assignment) must pass.
@@ -61,10 +59,21 @@ def test_lint_catches_the_defect_shape():
         "    return F.element_at(F.transform(F.array(\n"
         "        F.aggregate(vec, F.lit(0.0), lambda a, x: a + x)), _body), 1)\n"
     )
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as fh:
-        fh.write(good)
-        p = fh.name
-    try:
-        assert not hof_lint.lint_file(p), "fixed pattern falsely flagged"
-    finally:
-        os.unlink(p)
+    assert not _lint(tmp_path, good), "fixed pattern falsely flagged"
+
+
+def test_lint_respects_nested_lambda_and_comprehension_scopes(tmp_path):
+    # `s` names an expensive subtree in the function, but inside the HOF
+    # lambda a nested lambda parameter or a comprehension target rebinds
+    # it: those loads are the inner binding, not a capture
+    head = "def q(vec, mat):\n    s = F.aggregate(vec, F.lit(0.0), lambda a, x: a + x)\n"
+    shadowed = (
+        "    m = F.transform(mat, lambda r: F.aggregate(r, F.lit(0.0), lambda a, s: a + s))\n"
+        "    return F.transform(vec, lambda x: F.array(*[x * s for s in range(3)]))\n"
+    )
+    assert not _lint(tmp_path, head + shadowed), "shadowed name falsely flagged"
+    # a nested lambda that does NOT rebind it still captures the outer `s`
+    captured = (
+        "    return F.transform(mat, lambda r: F.aggregate(r, F.lit(0.0), lambda a, y: a + y * s))\n"
+    )
+    assert len(_lint(tmp_path, head + captured)) == 2

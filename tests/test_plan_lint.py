@@ -230,3 +230,28 @@ def test_plan_has_no_anti_patterns(spark, sf_dir, name):
         # bounded-frame windows.
         findings = [f for f in findings if "global window" not in f]
     assert not findings, f"{name}: {findings}"
+
+
+def test_sketch_kmv_reuses_one_orders_scan(spark, sf_dir, monkeypatch):
+    """sketch_kmv's one collect shares the membership shuffle across its
+    three branches through ReusedExchange, so orders is scanned once. The
+    reuse only fires while each branch's filter keeps its tautological
+    reference to the other flag (``statsq.sketch_kmv``); a Spark version
+    that prunes it would fall back to three scans."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    collected = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        collected.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    REGISTRY["sketch_kmv"].fn(spark, sf_dir)
+    assert len(collected) == 1
+    plan = collected[0]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final, plan
+    scans = [line for line in final.splitlines() if "FileScan" in line]
+    assert len(scans) == 1 and "orders" in scans[0], plan

@@ -58,12 +58,32 @@ def _contains_expensive_call(node: ast.AST) -> bool:
 
 
 def _free_names(lam: ast.Lambda) -> set[str]:
-    bound = {a.arg for a in lam.args.args}
-    names = set()
-    for sub in ast.walk(lam.body):
-        if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Load):
-            if sub.id not in bound:
-                names.add(sub.id)
+    """Names the lambda loads that no scope inside it binds: its own
+    parameters, a nested lambda's parameters and a comprehension's targets
+    each shadow an outer name of the same spelling within their scope."""
+    names: set[str] = set()
+
+    def visit(node: ast.AST, bound: frozenset) -> None:
+        if isinstance(node, ast.Lambda):
+            visit(node.body, bound | {a.arg for a in node.args.args})
+        elif isinstance(node, (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)):
+            inner = bound
+            for gen in node.generators:
+                visit(gen.iter, inner)
+                inner = inner | {n.id for n in ast.walk(gen.target) if isinstance(n, ast.Name)}
+                for cond in gen.ifs:
+                    visit(cond, inner)
+            elts = [node.key, node.value] if isinstance(node, ast.DictComp) else [node.elt]
+            for e in elts:
+                visit(e, inner)
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            if node.id not in bound:
+                names.add(node.id)
+        else:
+            for child in ast.iter_child_nodes(node):
+                visit(child, bound)
+
+    visit(lam, frozenset())
     return names
 
 
