@@ -11,7 +11,11 @@ Reference mapping (SURVEY.md §2.9-2.10):
 - snapshot read at ts ≈ ``PixelsReaderOption.transTimestamp``
   (``reader/PixelsReaderOption.java:93``) applied in the record reader
   (``PixelsRecordReaderImpl.java:512-545, 1104-1203``).
-- UPDATE = delete + insert in one transaction (README.md:34-36 CDC mirror).
+- every write is one ``_commit`` transaction: append rows, tombstone keys,
+  one commit ts, abort cleanup on failure. UPDATE appends the new rows and
+  tombstones their keys, read back from the written commit — an append and
+  a visibility bit per row, never a re-read of the table (README.md:34-36
+  CDC mirror; Retina's update path, SURVEY §2.9, §3.4).
 - point lookup by key ≈ SinglePointIndex.getUniqueRowId
   (``pixels-common/.../index/SinglePointIndex.java:108``) then the
   visibility check (``RGVisibility.java:144-158``): on an indexed table the
@@ -185,50 +189,78 @@ class MvccTable:
         if self.manifest.exists():
             self.manifest.remove_commits({ts})
 
-    def insert(self, df: DataFrame, ts: int | None = None) -> int:
+    def _commit(
+        self,
+        rows: DataFrame | None = None,
+        keys: DataFrame | None = None,
+        replace: bool = False,
+    ) -> int:
+        """The one write transaction every writer runs: draw a commit ts,
+        append ``rows`` stamped with it (≈ insertRecord: MemTable append +
+        hidden ts), then tombstone ``keys`` at it (≈ deleteRecord:537
+        flipping visibility bits at ts). ``replace`` also tombstones the
+        keys of the rows just written, read back from the commit's own key
+        column, so ``rows`` is evaluated once. A tombstone at ts hides only
+        versions committed before ts, so rows written at ts stay visible.
+        Returns the ts."""
+        ctx = self.trans.begin_trans()
+        ts = ctx.timestamp
+        try:
+            tombstones = None
+            if keys is not None:
+                tombstones = keys.select(F.col(keys.columns[0]).alias(self.key_col))
+            if rows is not None:
+                out = rows.withColumn(COMMIT_TS, F.lit(ts).cast("long"))
+                if self.indexed:
+                    # cluster by key so each file covers a narrow, disjoint
+                    # key range — what makes the per-file manifest selective
+                    parts = [self.index_files] if self.index_files else []
+                    out = out.repartitionByRange(
+                        *parts, self.key_col
+                    ).sortWithinPartitions(self.key_col)
+                else:
+                    # compact commit files on write: AQE REBALANCE sizes
+                    # output files to the advisory partition size instead of
+                    # inheriting the input's task count (a 32-slot session
+                    # otherwise writes 32 tiny files per commit, and every
+                    # later read pays a footer open per file per query)
+                    out = out.hint("rebalance")
+                commit_dir = os.path.join(self.data_dir, f"_commit={ts}")
+                # evolve the persisted schema BEFORE the data lands: a crash
+                # between the two then leaves a wider schema with no data
+                # (harmless nulls), never a committed column the
+                # explicit-schema read would hide
+                self._evolve_schema(out.schema)
+                out.write.mode("overwrite").parquet(commit_dir)
+                if self.indexed:
+                    self._index_commit(commit_dir, ts)
+                if replace:
+                    written = self._read_parquet(commit_dir).select(self.key_col)
+                    tombstones = (
+                        written if tombstones is None else tombstones.unionByName(written)
+                    )
+            if tombstones is not None:
+                out = tombstones.withColumn(DELETED_TS, F.lit(ts).cast("long"))
+                # the same commit-file compaction as the append
+                out.hint("rebalance").write.mode("overwrite").parquet(
+                    os.path.join(self.delete_dir, f"_commit={ts}")
+                )
+        except BaseException:
+            # a failed write (schema rejection, write error) must ABORT its
+            # transaction — a forever-pending ts would wedge the high
+            # watermark and hide every later commit — and remove its partial
+            # data and tombstones, which a later commit raising the
+            # watermark past ts would otherwise expose
+            self._abort_cleanup(ts)
+            self.trans.abort_trans(ctx)
+            raise
+        self.trans.commit_trans(ctx)
+        return ts
+
+    def insert(self, df: DataFrame) -> int:
         """Append rows stamped with a fresh commit timestamp
         (≈ insertRecord: MemTable append + hidden ts). Returns the ts."""
-        ctx = None
-        if ts is None:
-            ctx = self.trans.begin_trans()
-            ts = ctx.timestamp
-        try:
-            out = df.withColumn(COMMIT_TS, F.lit(ts).cast("long"))
-            if self.indexed:
-                # cluster by key so each file covers a narrow, disjoint key
-                # range — what makes the per-file manifest selective
-                parts = [self.index_files] if self.index_files else []
-                out = out.repartitionByRange(
-                    *parts, self.key_col
-                ).sortWithinPartitions(self.key_col)
-            else:
-                # compact commit files on write: AQE REBALANCE sizes output
-                # files to the advisory partition size instead of inheriting
-                # the input's task count (a 32-slot session otherwise writes
-                # 32 tiny files per commit, and every later read pays a
-                # footer open per file per query — O(slots x commits) opens)
-                out = out.hint("rebalance")
-            commit_dir = os.path.join(self.data_dir, f"_commit={ts}")
-            # evolve the persisted schema BEFORE the data lands: a crash
-            # between the two then leaves a wider schema with no data
-            # (harmless nulls), never a committed column the
-            # explicit-schema read would hide
-            self._evolve_schema(out.schema)
-            out.write.mode("overwrite").parquet(commit_dir)
-            if self.indexed:
-                self._index_commit(commit_dir, ts)
-        except BaseException:
-            # a failed insert (schema rejection, write error) must ABORT
-            # its transaction — a forever-pending ts would wedge the high
-            # watermark and hide every later committed insert — and remove
-            # any partial files at the aborted ts
-            if ctx is not None:
-                self._abort_cleanup(ts)
-                self.trans.abort_trans(ctx)
-            raise
-        if ctx is not None:
-            self.trans.commit_trans(ctx)
-        return ts
+        return self._commit(rows=df)
 
     def _index_commit(self, commit_dir: str, ts: int) -> None:
         """Record (file, min_key, max_key) for every file of a commit in the
@@ -240,55 +272,19 @@ class MvccTable:
         # vacuum's rewrite
         self.manifest.append(footer_range_entries(commit_dir, self.key_col, ts))
 
-    def delete(self, keys: Sequence | DataFrame, ts: int | None = None) -> int:
-        """Row-level delete by key at a commit timestamp
+    def delete(self, keys: Sequence | DataFrame) -> int:
+        """Row-level delete by key at a fresh commit timestamp
         (≈ deleteRecord:537 flipping visibility bits at ts)."""
-        ctx = None
-        if ts is None:
-            ctx = self.trans.begin_trans()
-            ts = ctx.timestamp
-        if isinstance(keys, DataFrame):
-            kdf = keys.select(F.col(keys.columns[0]).alias(self.key_col))
-        else:
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in keys], [self.key_col]
-            )
-        out = kdf.withColumn(DELETED_TS, F.lit(ts).cast("long")).hint(
-            "rebalance"  # same commit-file compaction as insert()
-        )
-        try:
-            out.write.mode("overwrite").parquet(
-                os.path.join(self.delete_dir, f"_commit={ts}")
-            )
-        except BaseException:
-            # same contract as insert(): a failed tombstone write must abort
-            # its transaction (else the pending ts wedges the watermark) and
-            # remove partial tombstones at the aborted ts (else they become
-            # visible once a later commit raises the watermark past it)
-            if ctx is not None:
-                self._abort_cleanup(ts)
-                self.trans.abort_trans(ctx)
-            raise
-        if ctx is not None:
-            self.trans.commit_trans(ctx)
-        return ts
+        if not isinstance(keys, DataFrame):
+            keys = self.spark.createDataFrame([(k,) for k in keys], [self.key_col])
+        return self._commit(keys=keys)
 
     def update(self, df: DataFrame) -> int:
-        """UPDATE = delete old versions of the keys + insert new rows in one
-        transaction (one commit ts), per the reference's CDC convention."""
-        ctx = self.trans.begin_trans()
-        try:
-            self.delete(df.select(self.key_col), ts=ctx.timestamp)
-            self.insert(df, ts=ctx.timestamp)
-        except BaseException:
-            # remove the tombstones/data written at the aborted ts (a later
-            # commit would otherwise raise the watermark past it and expose
-            # them), then release the ts so the watermark is not wedged
-            self._abort_cleanup(ctx.timestamp)
-            self.trans.abort_trans(ctx)
-            raise
-        self.trans.commit_trans(ctx)
-        return ctx.timestamp
+        """UPDATE = insert the new rows and tombstone their keys' older
+        versions in one transaction (one commit ts), per the reference's
+        CDC convention; the tombstoned keys are read back from the written
+        commit, so ``df`` is evaluated once."""
+        return self._commit(rows=df, replace=True)
 
     def merge(
         self,
@@ -308,55 +304,38 @@ class MvccTable:
         - ``delete_unmatched_target=True`` additionally deletes target keys
           missing from the source (full-sync semantics).
 
-        All actions commit at one timestamp: deletes at ts hide only
-        versions committed strictly before ts, so replaced rows inserted in
-        the same transaction stay visible (the UPDATE convention). Matching
-        is one left-semi/anti join against the current snapshot's key set —
-        no collect, scales with a shuffle on the key.
+        All actions commit at one timestamp, and a tombstone at ts hides
+        only versions committed before ts. So a matched action's tombstones
+        need no matched/unmatched split: an unmatched key has no visible
+        version for its tombstone to hide, and a row inserted at ts stays
+        visible (the UPDATE convention). 'update' tombstones the
+        keys of the rows it writes, read back from the commit; 'delete'
+        tombstones every source key. The default update + insert is then
+        one append of the source with no read of the table. Only a merge
+        that inserts one side of the source and not the other, or a full
+        sync, joins against the current snapshot's key set (a left-semi or
+        anti join: no collect, a shuffle on the key).
         """
         if when_matched not in ("update", "delete", "ignore"):
             raise ValueError(f"when_matched={when_matched!r}")
         if when_not_matched not in ("insert", "ignore"):
             raise ValueError(f"when_not_matched={when_not_matched!r}")
-        if self.persisted_schema() is None:
-            # never-written target (found by the r12 model fuzz): the
-            # empty read has no columns to join on — every source key is
-            # unmatched (MERGE bootstraps the table) and there is no
-            # target to full-sync against
-            existing = None
-            matched = source.limit(0)
-            unmatched = source
-        else:
+        one_side = (when_matched == "update") != (when_not_matched == "insert")
+        existing = None
+        # a never-written target (found by the r12 model fuzz) has no
+        # columns to join on: every source key is unmatched, and there is
+        # no target to full-sync against
+        if (one_side or delete_unmatched_target) and self.persisted_schema() is not None:
             existing = self.read_latest_version().select(self.key_col)
-            matched = source.join(existing, self.key_col, "left_semi")
-            unmatched = source.join(existing, self.key_col, "left_anti")
-        src_keys = source.select(self.key_col)
-
-        del_keys = None
-        if when_matched in ("update", "delete"):
-            del_keys = matched.select(self.key_col)
-        if delete_unmatched_target and existing is not None:
-            gone = existing.join(src_keys, self.key_col, "left_anti")
-            del_keys = gone if del_keys is None else del_keys.unionByName(gone)
-
-        inserts = None
-        if when_matched == "update":
-            inserts = matched
-        if when_not_matched == "insert":
-            inserts = unmatched if inserts is None else inserts.unionByName(unmatched)
-
-        ctx = self.trans.begin_trans()
-        try:
-            if del_keys is not None:
-                self.delete(del_keys, ts=ctx.timestamp)
-            if inserts is not None:
-                self.insert(inserts, ts=ctx.timestamp)
-        except BaseException:
-            self._abort_cleanup(ctx.timestamp)
-            self.trans.abort_trans(ctx)
-            raise
-        self.trans.commit_trans(ctx)
-        return ctx.timestamp
+        rows = source if when_not_matched == "insert" else None
+        if one_side and existing is not None:
+            how = "left_semi" if when_matched == "update" else "left_anti"
+            rows = source.join(existing, self.key_col, how)
+        keys = source.select(self.key_col) if when_matched == "delete" else None
+        if existing is not None and delete_unmatched_target:
+            gone = existing.join(source.select(self.key_col), self.key_col, "left_anti")
+            keys = gone if keys is None else keys.unionByName(gone)
+        return self._commit(rows, keys, replace=when_matched == "update")
 
     # -- read path ---------------------------------------------------------
     def _tombstone_files(self, after: int = -1, upto: int | None = None) -> list[str]:
@@ -389,6 +368,28 @@ class MvccTable:
             self.spark.read.schema(schema)
             .option("basePath", self.delete_dir)
             .parquet(self.delete_dir)
+        )
+
+    def _tombstones(self, ts: int, newest: bool = True) -> DataFrame | None:
+        """The tombstones visible at ``ts`` (commit dir and delete ts both
+        ≤ ts; the dir filter prunes by path), or None when the table has
+        none. ``newest`` folds them to each key's newest delete ts as
+        ``(_del_key, _del_ts)``; otherwise one ``(key, _deleted_ts)`` row
+        per tombstone."""
+        dels = self._deletes()
+        if dels is None:
+            return None
+        d = (
+            dels.filter(F.col("_commit") <= ts)
+            .drop("_commit")
+            .filter(F.col(DELETED_TS) <= ts)
+        )
+        if not newest:
+            return d
+        return (
+            d.groupBy(self.key_col)
+            .agg(F.max(DELETED_TS).alias("_del_ts"))
+            .withColumnRenamed(self.key_col, "_del_key")
         )
 
     # -- schema evolution --------------------------------------------------
@@ -504,17 +505,9 @@ class MvccTable:
         delete+insert in one transaction (UPDATE, same ts) leaves the new
         version visible — matching the reference's CDC mirror convention
         (delete old version, insert new, one commit)."""
-        dels = self._deletes()
-        if dels is None:
+        d = self._tombstones(snapshot_ts)
+        if d is None:
             return visible
-        d = (
-            dels.filter(F.col("_commit") <= snapshot_ts)
-            .drop("_commit")
-            .filter(F.col(DELETED_TS) <= snapshot_ts)
-            .groupBy(self.key_col)
-            .agg(F.max(DELETED_TS).alias("_del_ts"))
-            .withColumnRenamed(self.key_col, "_del_key")
-        )
         return visible.join(
             d,
             (visible[self.key_col] == F.col("_del_key"))
@@ -658,11 +651,11 @@ class MvccTable:
 
         Write volume is O(Δ), not O(table): keys that vanished since
         ``ts`` are re-inserted, keys added since are deleted, changed
-        keys are updated back (delete+insert at one ts, the UPDATE
+        keys are updated back (insert + tombstone at one ts, the UPDATE
         convention) — computed with one ``exceptAll`` + one anti-join
         between the two snapshots, all shuffles keyed on the key. Rows
         untouched since ``ts`` are not rewritten. One transaction; abort
-        removes any partial files (same cleanup contract as merge).
+        removes any partial files (the ``_commit`` contract).
         """
         if self.persisted_schema() is None:
             raise ValueError("restore on a never-written table")
@@ -674,18 +667,7 @@ class MvccTable:
         gone = current.select(self.key_col).join(
             target.select(self.key_col), self.key_col, "left_anti"
         )
-        changed = target.exceptAll(current)
-        del_keys = gone.unionByName(changed.select(self.key_col))
-        ctx = self.trans.begin_trans()
-        try:
-            self.delete(del_keys, ts=ctx.timestamp)
-            self.insert(changed, ts=ctx.timestamp)
-        except BaseException:
-            self._abort_cleanup(ctx.timestamp)
-            self.trans.abort_trans(ctx)
-            raise
-        self.trans.commit_trans(ctx)
-        return ctx.timestamp
+        return self._commit(rows=target.exceptAll(current), keys=gone, replace=True)
 
     def clone(self, dest_root: str, ts: int | None = None) -> "MvccTable":
         """Zero-copy SHALLOW CLONE at snapshot ``ts`` (Delta Lake
@@ -804,7 +786,7 @@ class MvccTable:
             .drop("_commit")
             .filter(F.col(COMMIT_TS) <= snapshot_ts)
         )
-        dels = self._deletes()
+        dels = self._tombstones(snapshot_ts, newest=False)
         if dels is None:
             nxt = F.lead(COMMIT_TS).over(
                 Window.partitionBy(self.key_col).orderBy(COMMIT_TS)
@@ -824,21 +806,16 @@ class MvccTable:
             # the same values lead() and min(DELETED_TS > ts) produced.
             # A same-ts tombstone (UPDATE's delete+insert pair) stays
             # excluded, matching apply_delete_visibility's strict <.
-            d = (
-                dels.filter(F.col("_commit") <= snapshot_ts)
-                .drop("_commit")
-                .filter(F.col(DELETED_TS) <= snapshot_ts)
-                .select(
-                    *[
-                        F.lit(None).cast(data.schema[c].dataType).alias(c)
-                        if c != self.key_col
-                        else F.col(self.key_col)
-                        for c in data.columns
-                    ],
-                    F.col(DELETED_TS).alias("_ord_ts"),
-                    F.col(DELETED_TS).alias("_tomb_ts"),
-                    F.lit(None).cast("long").alias("_ver_ts"),
-                )
+            d = dels.select(
+                *[
+                    F.lit(None).cast(data.schema[c].dataType).alias(c)
+                    if c != self.key_col
+                    else F.col(self.key_col)
+                    for c in data.columns
+                ],
+                F.col(DELETED_TS).alias("_ord_ts"),
+                F.col(DELETED_TS).alias("_tomb_ts"),
+                F.lit(None).cast("long").alias("_ver_ts"),
             )
             u = data.select(
                 "*",
@@ -927,20 +904,12 @@ class MvccTable:
         Time travel to snapshots older than ``retain_ts`` is forfeited for
         the removed commits — same contract as the reference's GC horizon.
         """
-        dels = self._deletes()
-        if dels is None or not os.path.isdir(self.data_dir):
+        d = self._tombstones(retain_ts)
+        if d is None or not os.path.isdir(self.data_dir):
             # delete-only table (tombstones but never a data commit, r12
             # model fuzz): nothing to GC
             return []
         removed: list[int] = []
-        d = (
-            dels.filter(F.col("_commit") <= retain_ts)
-            .drop("_commit")
-            .filter(F.col(DELETED_TS) <= retain_ts)
-            .groupBy(self.key_col)
-            .agg(F.max(DELETED_TS).alias("_del_ts"))
-            .withColumnRenamed(self.key_col, "_del_key")
-        )
         for ts in _commits(self.data_dir):
             if ts >= retain_ts:
                 continue

@@ -96,9 +96,9 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
 def dml(spark: SparkSession, sf_dir: str, tables: dict, text: str) -> int:
     """Route a DML statement onto an MVCC table — the mutation half of the
     SQL frontend (the reference runs these through its Trino connector into
-    Retina; here the restricted grammar below maps 1:1 onto
-    ``MvccTable.insert/delete/update``, which carry the transactional
-    contract — one commit ts, abort cleanup, index maintenance).
+    Retina; here each statement of the restricted grammar below becomes one
+    call of ``MvccTable.insert/delete/update``, and so one ``_commit``
+    transaction — one commit ts, abort cleanup, index maintenance).
 
     Grammar (documented subset, errors are loud, nothing is guessed):
 
@@ -108,8 +108,10 @@ def dml(spark: SparkSession, sf_dir: str, tables: dict, text: str) -> int:
     - ``DELETE FROM <t> [WHERE <pred>]`` — the predicate evaluates
       against the current snapshot; matching keys get tombstones.
     - ``UPDATE <t> SET c = expr[, ...] [WHERE <pred>]`` — matching rows
-      are rewritten (delete+insert at one ts, the CDC convention);
-      unassigned columns pass through.
+      are rewritten (new rows appended and their keys tombstoned at one
+      ts, the CDC convention); the SELECT over the snapshot view runs
+      once, as the append, and the tombstone keys are read back from the
+      written commit. Unassigned columns pass through.
 
     MERGE INTO text is intentionally NOT parsed here — use
     ``MvccTable.merge`` (richer matched/unmatched actions than the SQL

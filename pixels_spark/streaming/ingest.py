@@ -5,9 +5,12 @@ Reference lifecycle (SURVEY.md §3.4): CDC source → RetinaService
 ordered files; readers merge files + write buffer at their snapshot ts.
 
 Spark mapping: ``readStream`` → ``foreachBatch`` — each micro-batch is one
-transaction: it draws a commit ts, appends to the MvccTable, and commits.
-Freshness = trigger interval; the write buffer disappears because a
-committed micro-batch is immediately snapshot-visible.
+MvccTable write transaction (``MvccTable._commit``, the path every batch
+write takes): one commit ts for its appends and tombstones, committed
+whole or aborted whole — a failed batch leaves no files behind and does not
+hold back the table's watermark. Freshness = trigger interval; the write
+buffer disappears because a committed micro-batch is immediately
+snapshot-visible.
 
 Scale notes: foreachBatch keeps the append path identical to batch writes
 (same parquet layout, same hidden column), so the table never forks into
@@ -61,30 +64,30 @@ def ingest_cdc_stream(
     the UPDATE = delete+insert mirror convention, README.md:34-36).
 
     ``stream_df`` carries an ``op_col`` of 'I' (insert), 'U' (update) or
-    'D' (delete). Each micro-batch becomes ONE transaction (one commit ts):
-    deletes for the batch's D/U keys + inserts of the I/U payloads — so a
-    snapshot either sees the whole batch or none of it, matching the
-    reference's per-replay-batch atomicity.
+    'D' (delete). Each micro-batch becomes ONE ``MvccTable._commit`` (one
+    commit ts): the I/U payloads are appended and the D/U keys tombstoned
+    — so a snapshot either sees the whole batch or none of it, matching
+    the reference's per-replay-batch atomicity. A batch that fails (say, a
+    payload column whose type conflicts with the table's) aborts: its
+    files are removed, its ts is released, and the stream stops with the
+    error.
     """
     from pyspark.sql import functions as F
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        ops = {r[0] for r in batch_df.select(op_col).distinct().collect()}
+        if not ops:
             return
-        ctx = table.trans.begin_trans()
-        del_keys = batch_df.filter(F.col(op_col).isin("D", "U")).select(
-            table.key_col
-        )
         # inserts come DIRECTLY from the I/U rows — a semi-join of all
         # payload rows against I/U keys would also resurrect a D row's
         # stale payload when one batch carries both a delete and an
         # insert for the same key
-        ins_rows = batch_df.filter(F.col(op_col).isin("I", "U")).drop(op_col)
-        if not del_keys.isEmpty():
-            table.delete(del_keys, ts=ctx.timestamp)
-        if not ins_rows.isEmpty():
-            table.insert(ins_rows, ts=ctx.timestamp)
-        table.trans.commit_trans(ctx)
+        rows = keys = None
+        if ops & {"I", "U"}:
+            rows = batch_df.filter(F.col(op_col).isin("I", "U")).drop(op_col)
+        if ops & {"D", "U"}:
+            keys = batch_df.filter(F.col(op_col).isin("D", "U")).select(table.key_col)
+        table._commit(rows=rows, keys=keys)
 
     writer = (
         stream_df.writeStream.foreachBatch(commit_batch)

@@ -222,6 +222,31 @@ def test_indexed_point_lookup_job_counts(spark, tmp_path):
         assert plan.startswith("LocalTableScan"), plan
 
 
+def test_indexed_write_path_job_counts(spark, tmp_path):
+    """Every write is one ``_commit``. The default merge appends the source
+    and reads its keys back from the commit for the tombstones, with no
+    read of the table: it runs the same jobs as an UPDATE (the clustered
+    append, then the tombstone write), and a delete runs only the
+    tombstone write. The tombstone a merge writes for a new key hides
+    nothing."""
+    t = MvccTable(
+        spark, str(tmp_path / "wj"), key_col="k", indexed=True, index_files=2
+    )
+    t.insert(spark.createDataFrame([(k, float(k)) for k in range(40)], ["k", "v"]))
+    merge_ts, merge_jobs = _jobs_run(
+        spark, lambda: t.merge(spark.createDataFrame([(5, 55.0), (100, 1.0)], ["k", "v"]))
+    )
+    _, update_jobs = _jobs_run(
+        spark, lambda: t.update(spark.createDataFrame([(6, 66.0)], ["k", "v"]))
+    )
+    _, delete_jobs = _jobs_run(spark, lambda: t.delete([7]))
+    assert (merge_jobs, update_jobs, delete_jobs) == (5, 5, 2)
+    got = t.read_latest_version().filter(F.col("k").isin(5, 6, 7, 100))
+    assert sorted((r.k, r.v) for r in got.collect()) == [(5, 55.0), (6, 66.0), (100, 1.0)]
+    new_key = t.read_history().filter(F.col("k") == 100).collect()
+    assert [(r.valid_from_ts, r.is_current) for r in new_key] == [(merge_ts, True)]
+
+
 def test_indexed_point_lookup_round_trips_every_column_type(spark, tmp_path):
     """The driver-side row read serves what the merge-on-read path serves
     — rows, column names, order and types — for decimal, date, both

@@ -186,6 +186,39 @@ def test_cdc_delete_and_insert_same_key_one_batch(spark, events, tmp_path):
     assert latest.count() == 10
 
 
+def test_cdc_failed_batch_aborts_without_wedging_the_table(spark, tmp_path):
+    """A micro-batch carrying a D of an existing key and an I whose payload
+    column conflicts with the table's type (schema evolution raises) must
+    abort as a whole: the oracle keeps no pending ts, no tombstone commit
+    survives, and a later insert is visible."""
+    import os
+
+    from pixels_spark.streaming import ingest_cdc_stream
+
+    table = MvccTable(spark, str(tmp_path / "wedge_tbl"), key_col="k")
+    table.insert(spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double"))
+    cdc_schema = "k long, v string, op string"
+    src = str(tmp_path / "wedge_src")
+    spark.createDataFrame([(1, None, "D"), (3, "three", "I")], cdc_schema).coalesce(
+        1
+    ).write.parquet(src)
+    q = ingest_cdc_stream(
+        spark.readStream.schema(cdc_schema).parquet(src),
+        table,
+        str(tmp_path / "wedge_ckpt"),
+    )
+    with pytest.raises(Exception, match="schema evolution cannot change"):
+        q.awaitTermination(120)
+
+    assert table.trans._read()["pending"] == []
+    assert not any(
+        e.startswith("_commit=")
+        for e in (os.listdir(table.delete_dir) if os.path.isdir(table.delete_dir) else [])
+    )
+    table.insert(spark.createDataFrame([(4, 4.0)], "k long, v double"))
+    assert sorted(r.k for r in table.read().collect()) == [1, 2, 4]
+
+
 def test_dedup_stream_drops_replayed_duplicates(spark, events, tmp_path):
     from pixels_spark.streaming.ingest import dedup_stream
 
